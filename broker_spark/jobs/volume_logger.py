@@ -29,8 +29,8 @@ from broker_spark.serving.publish import PublishRequest, PublishSpool
 _SUMMARY_RATES = {
     "inPerSecond": "publisher.messages",
     "outPerSecond": "gateway.outMessages",
-    "storageReadPerSecond": "storage.readCount",
-    "storageWritePerSecond": "storage.writeCount",
+    "storageReadPerSecond": "storage.readMessages",
+    "storageWritePerSecond": "storage.writeMessages",
 }
 _SUMMARY_KB = {
     "kbInPerSecond": "publisher.bytes",

@@ -1,13 +1,20 @@
-"""Metadata aggregates (SURVEY §2.4 A1-A8).
+"""Metadata aggregates (SURVEY §2.4 A1-A8) as one rollup.
 
 The reference answers count/bytes/first/last from the small `bucket`
-counter table (`src/storage/Storage.ts:452-576`,
-`src/http/DataMetadataEndpoints.ts:21-26`).  On Spark the same numbers
-come from either (a) a metadata-only parquet scan — `count()` reads footer
-row counts, min/max read row-group stats (spark.sql.parquet.aggregatePushdown)
-— or (b) the `bucket_index` summary DataFrame below, the direct analog of
-the reference's bucket table, cheap to maintain per micro-batch and the
-right answer at 100 TB (keep a summary table; never full-scan for a count).
+counter table, kept as running sums (`src/storage/Storage.ts:452-576`,
+`src/storage/BucketManager.ts:325-344`).  That summary — `records`,
+`size`, `date_create`, `max_ts` per (stream, partition, bucket) — is a
+monoid (sum, sum, min, max), so it is defined once here:
+
+- `message_rows` reads each log message as a one-message summary row;
+- `summarize` merges rows of that shape, grouped by whatever keys the
+  caller passes.
+
+Every metadata answer is `summarize` over one of two sources: the log's
+one-message rows, or an already-summarized table (the streaming-maintained
+summary, `streaming.maintenance`).  Both sources have the same columns, so
+a mix of them — a stored summary plus a new micro-batch — merges the same
+way.
 """
 
 from __future__ import annotations
@@ -15,78 +22,49 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from broker_spark.schema import DEFAULT_BUCKET_MS, bucket_of
+from broker_spark.schema import DEFAULT_BUCKET_MS, with_bucket
+
+#: The summary table's grain — one row per (stream, partition, bucket).
+BUCKET_KEYS = ("stream_id", "partition", "bucket")
+
+
+def message_rows(df: DataFrame) -> DataFrame:
+    """Each message of a bucketed frame (the log, or `schema.with_bucket`
+    output) as a one-message summary row: `records = 1`,
+    `size = octet_length(content)`, `date_create = max_ts = ts`.
+
+    Built as one SQL parse: metadata requests build this per call, and a
+    Column per field costs a Py4J round-trip each."""
+    return df.selectExpr(
+        "stream_id",
+        "partition",
+        "bucket",
+        "1L AS records",
+        "CAST(octet_length(content) AS BIGINT) AS size",
+        "ts AS date_create",
+        "ts AS max_ts",
+    )
+
+
+def summarize(rows: DataFrame, *keys: str) -> DataFrame:
+    """The summary rollup over `message_rows`-shaped rows, grouped by `keys`
+    (none: one row).  Counts and sizes add, `date_create` takes the min,
+    `max_ts` the max — the reference's `records = records + ?` UPSERT as a
+    groupBy.  LongType sums, so the reference's int-overflow re-sum
+    (src/storage/Storage.ts:556-575) is unnecessary."""
+    return rows.groupBy(*keys).agg(
+        F.expr("sum(records) AS records"),
+        F.expr("sum(size) AS size"),
+        F.expr("min(date_create) AS date_create"),
+        F.expr("max(max_ts) AS max_ts"),
+    )
 
 
 def bucket_index(df: DataFrame, bucket_ms: int = DEFAULT_BUCKET_MS) -> DataFrame:
-    """A8: the `bucket` summary table, derived instead of hand-maintained.
-
-    Reference columns `stream_id, partition, date_create, id, records, size`
-    with counters UPSERTed every 500 ms (src/storage/BucketManager.ts:
-    232,302,325-344).  Here it is one aggregation; in streaming it is the
-    same aggregation merged in foreachBatch.
-    """
-    with_b = df.withColumn("bucket", bucket_of(F.col("ts"), bucket_ms))
-    return with_b.groupBy("stream_id", "partition", "bucket").agg(
-        F.count(F.lit(1)).alias("records"),
-        F.sum(F.octet_length(F.col("content"))).alias("size"),
-        F.min("ts").alias("date_create"),
-        F.max("ts").alias("max_ts"),
-    )
-
-
-def message_count(df: DataFrame, stream_id: str) -> DataFrame:
-    """A2 getNumberOfMessagesInStream (src/storage/Storage.ts:520-537)."""
-    return (
-        df.filter(F.col("stream_id") == stream_id)
-        .groupBy("stream_id", "partition")
-        .agg(F.count(F.lit(1)).alias("records"))
-    )
-
-
-def total_bytes(df: DataFrame, stream_id: str) -> DataFrame:
-    """A3 getTotalBytesInStream (src/storage/Storage.ts:539-576).
-
-    LongType sum — the reference's int-overflow fallback re-sum
-    (src/storage/Storage.ts:556-575) is unnecessary.
-    """
-    return (
-        df.filter(F.col("stream_id") == stream_id)
-        .groupBy("stream_id", "partition")
-        .agg(F.sum(F.octet_length(F.col("content"))).alias("total_bytes"))
-    )
-
-
-def first_message_ts(df: DataFrame, stream_id: str, partition: int) -> DataFrame:
-    """A4 getFirstMessageTimestampInStream (src/storage/Storage.ts:452-484).
-    min() reads parquet row-group stats — metadata-only at any scale."""
-    return (
-        df.filter((F.col("stream_id") == stream_id) & (F.col("partition") == partition))
-        .agg(F.min("ts").alias("first_ts"))
-    )
-
-
-def last_message_ts(df: DataFrame, stream_id: str, partition: int) -> DataFrame:
-    """A5 getLastMessageTimestampInStream (src/storage/Storage.ts:486-518)."""
-    return (
-        df.filter((F.col("stream_id") == stream_id) & (F.col("partition") == partition))
-        .agg(F.max("ts").alias("last_ts"))
-    )
-
-
-def partition_metadata(df: DataFrame, stream_id: str, partition: int) -> DataFrame:
-    """The DataMetadataEndpoints response (src/http/DataMetadataEndpoints.ts:
-    21-26) — totalBytes / totalMessages / firstMessage / lastMessage — as
-    ONE aggregation pass (the reference issues four separate queries)."""
-    return (
-        df.filter((F.col("stream_id") == stream_id) & (F.col("partition") == partition))
-        .agg(
-            F.sum(F.octet_length(F.col("content"))).alias("totalBytes"),
-            F.count(F.lit(1)).alias("totalMessages"),
-            F.unix_millis(F.min("ts")).alias("firstMessage"),
-            F.unix_millis(F.max("ts")).alias("lastMessage"),
-        )
-    )
+    """A8: the `bucket` summary table of a log, derived instead of
+    hand-maintained (reference columns `stream_id, partition, date_create,
+    id, records, size`, src/storage/BucketManager.ts:232,302,325-344)."""
+    return summarize(message_rows(with_bucket(df, bucket_ms=bucket_ms)), *BUCKET_KEYS)
 
 
 def distinct_stream_partitions(df: DataFrame) -> DataFrame:

@@ -441,6 +441,10 @@ def trailing_distinct_users_interval(
             .alias("h"),
             F.col(user_col).alias("user_id"),
         )
+        # a user whose hours are all NULL would get an empty set, and
+        # element_at(hs, 0) fails; NULL hours count in no window (as in
+        # the hop form), so drop them first
+        .where(F.col("h").isNotNull())
         .groupBy("user_id")
         .agg(F.sort_array(F.collect_set("h")).alias("hs"))
     )

@@ -57,16 +57,6 @@ STREAM_MESSAGE_SCHEMA = StructType(
     ]
 )
 
-#: Columns that identify a message — reference src/storage/BatchManager.ts:8-10
-IDENTITY_COLUMNS = [
-    "stream_id",
-    "partition",
-    "ts",
-    "sequence_no",
-    "publisher_id",
-    "msg_chain_id",
-]
-
 #: Total-order within a stream-partition — reference src/storage/Storage.ts:111
 ORDERING_COLUMNS = ["ts", "sequence_no", "publisher_id", "msg_chain_id"]
 

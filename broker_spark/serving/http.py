@@ -13,8 +13,8 @@ Routes (src/http/DataQueryEndpoints.ts:65-105, DataMetadataEndpoints.ts):
 Validation order and every 400 error text match the reference byte-for-
 byte (asserted against test/unit/http/DataQueryEndpoints.test.ts:76-115).
 Authentication (src/http/RequestAuthenticatorMiddleware.ts) is a call-out
-to an external core API and stays out of the engine; plug a check into
-`authenticate` if needed.
+to an external core API (`serving.auth.StreamFetcher`); without a fetcher
+every request is allowed.
 
 Results are streamed: the handler iterates `Storage.stream_rows`
 (`toLocalIterator`) through `formats.frame`, chunk-encoding each message
@@ -25,16 +25,14 @@ control).
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 
-from broker_spark.operators.resend import (
-    MAX_SEQUENCE_NUMBER_VALUE,
-    MIN_SEQUENCE_NUMBER_VALUE,
-)
+from broker_spark.schema import MAX_SEQUENCE_NUMBER_VALUE, MIN_SEQUENCE_NUMBER_VALUE
 from broker_spark.serving.formats import frame, get_format
 from broker_spark.storage.store import Storage
 
@@ -95,19 +93,12 @@ class DataQueryHandler(BaseHTTPRequestHandler):
     metrics = None  # jobs.stream_metrics.MetricsContext, injected by serve()
     storage_config = None  # storage.config.StorageConfig, injected by serve()
 
-    def authenticate(self, stream_id: str, operation: str = "stream_subscribe") -> bool:
-        """Hook for the core-API permission check; default allow."""
-        return True
-
     def _authorize(self, stream_id: str, operation: str) -> bool:
         """Authenticator middleware (RequestAuthenticatorMiddleware.ts:11-53):
         Bearer-header parsing + memoized StreamFetcher permission check with
-        the reference's status/error mapping.  Falls back to the boolean
-        `authenticate` hook when no StreamFetcher is configured."""
+        the reference's status/error mapping.  Allows everything when no
+        StreamFetcher is configured."""
         if self.stream_fetcher is None:
-            if not self.authenticate(stream_id, operation):
-                self._send_json(403, {"error": "Authentication failed."})
-                return False
             return True
         from broker_spark.serving.auth import authenticate_request
 
@@ -233,7 +224,9 @@ class DataQueryHandler(BaseHTTPRequestHandler):
             if _is_nan(count):
                 self._error(f'Query parameter "count" not a number: {_first(qs, "count")}')
                 return
-            df = self.storage.request_last(stream_id, partition, count)
+            request = functools.partial(
+                self.storage.request_last, stream_id, partition, count
+            )
         elif name == "from":
             from_ts = _parse_int_if_exists(qs, "fromTimestamp")
             from_seq = _seq_or_default(qs, "fromSequenceNumber", MIN_SEQUENCE_NUMBER_VALUE)
@@ -246,8 +239,9 @@ class DataQueryHandler(BaseHTTPRequestHandler):
                     f'Query parameter "fromTimestamp" not a number: {_first(qs, "fromTimestamp")}'
                 )
                 return
-            df = self.storage.request_from(
-                stream_id, partition, from_ts, from_seq, publisher_id or None, None
+            request = functools.partial(
+                self.storage.request_from,
+                stream_id, partition, from_ts, from_seq, publisher_id or None, None,
             )
         else:  # range
             from_ts = _parse_int_if_exists(qs, "fromTimestamp")
@@ -285,7 +279,8 @@ class DataQueryHandler(BaseHTTPRequestHandler):
             if bool(publisher_id) != bool(msg_chain_id):
                 self._error('Invalid combination of "publisherId" and "msgChainId"')
                 return
-            df = self.storage.request_range(
+            request = functools.partial(
+                self.storage.request_range,
                 stream_id,
                 partition,
                 from_ts,
@@ -296,11 +291,11 @@ class DataQueryHandler(BaseHTTPRequestHandler):
                 msg_chain_id or None,
             )
 
-        # Pull the first frame chunk BEFORE committing the 200 so a storage
-        # failure still yields the reference's 500 JSON ('data.on("error")'
-        # before headersSent, DataQueryEndpoints.ts:86-93).
+        # Build the query and pull the first frame chunk BEFORE committing
+        # the 200 so a storage failure still yields the reference's 500 JSON
+        # ('data.on("error")' before headersSent, DataQueryEndpoints.ts:86-93).
         try:
-            pieces = frame(self.storage.stream_rows(df), fmt, version)
+            pieces = frame(self.storage.stream_rows(request()), fmt, version)
             first = next(pieces)
         except StopIteration:
             first = None
@@ -338,8 +333,11 @@ class DataQueryHandler(BaseHTTPRequestHandler):
             self._error(f'Path parameter "partition" not a number: {partition_raw}')
             return
         partition = int(pm.group(0))
-        st = self.storage
-        meta = st.partition_metadata(stream_id, partition)
+        try:
+            meta = self.storage.partition_metadata(stream_id, partition)
+        except Exception:
+            self._send_json(500, {"error": "Failed to fetch data!"})
+            return
         self._send_json(200, meta)
 
 

@@ -22,8 +22,7 @@ import urllib.request
 from collections.abc import Callable, Iterator
 from urllib.parse import quote, urlencode
 
-MIN_SEQUENCE_NUMBER_VALUE = 0
-MAX_SEQUENCE_NUMBER_VALUE = 2147483647
+from broker_spark.schema import MAX_SEQUENCE_NUMBER_VALUE, MIN_SEQUENCE_NUMBER_VALUE
 
 
 class GenericError(Exception):

@@ -33,6 +33,7 @@ import socketserver
 import threading
 import time
 
+from broker_spark.schema import MAX_SEQUENCE_NUMBER_VALUE, MIN_SEQUENCE_NUMBER_VALUE
 from broker_spark.serving.formats import to_protocol_array
 from broker_spark.serving.publish import (
     PublishError,
@@ -155,14 +156,17 @@ class ControlHandler(socketserver.StreamRequestHandler):
         elif t == "ResendFromRequest":
             df = self.storage.request_from(
                 sid, part,
-                int(req["fromTimestamp"]), int(req.get("fromSequenceNumber", 0)),
+                int(req["fromTimestamp"]),
+                int(req.get("fromSequenceNumber", MIN_SEQUENCE_NUMBER_VALUE)),
                 req.get("publisherId"), None,
             )
         else:
             df = self.storage.request_range(
                 sid, part,
-                int(req["fromTimestamp"]), int(req.get("fromSequenceNumber", 0)),
-                int(req["toTimestamp"]), int(req.get("toSequenceNumber", 2147483647)),
+                int(req["fromTimestamp"]),
+                int(req.get("fromSequenceNumber", MIN_SEQUENCE_NUMBER_VALUE)),
+                int(req["toTimestamp"]),
+                int(req.get("toSequenceNumber", MAX_SEQUENCE_NUMBER_VALUE)),
                 req.get("publisherId"), req.get("msgChainId"),
             )
         for msg in resend_response(

@@ -2,11 +2,15 @@
 partitioned parquet log + the resend/metadata operators.
 
 Mirrors the public surface of src/storage/Storage.ts:
-requestLast / requestFrom / requestRange (101-435), first/last message ts
-(452-518), message count (520-537), total bytes (539-576) — each returning
-a lazily-planned DataFrame; the serving layer decides how to consume it
+requestLast / requestFrom / requestRange (101-435) — each returning a
+lazily-planned DataFrame; the serving layer decides how to consume it
 (`toLocalIterator()` for streamed delivery with backpressure, the analog of
-the reference's pause/resume row streaming at 412-435).
+the reference's pause/resume row streaming at 412-435) — and the metadata
+numbers (first/last message ts, message count, total bytes, 452-576).
+
+Metadata is one rollup (`operators.metadata.summarize`) with two sources:
+the maintained bucket summary when `summary_path` can be read, otherwise
+the log read as one-message summary rows.  Storage only picks the source.
 """
 
 from __future__ import annotations
@@ -18,7 +22,7 @@ from pyspark.sql import functions as F
 
 from broker_spark.operators import metadata, resend
 from broker_spark.schema import DEFAULT_BUCKET_MS
-from broker_spark.storage.writer import read_stream_data, write_stream_data
+from broker_spark.storage.writer import if_written, read_stream_data, write_stream_data
 
 
 class Storage:
@@ -30,23 +34,15 @@ class Storage:
         summary_path: str | None = None,
     ) -> None:
         """`summary_path`: optional bucket-index summary table maintained by
-        `streaming.maintenance.foreach_batch_bucket_index`.  When present,
-        metadata queries read the summary (a few rows per bucket) instead
-        of scanning the log — the reference's bucket-counter strategy
+        `streaming.maintenance.foreach_batch_bucket_index`.  When it can be
+        read, metadata queries roll up the summary (a few rows per bucket)
+        instead of the log — the reference's bucket-counter strategy
         (src/storage/Storage.ts:520-576), and the only sane answer at
         100 TB."""
         self.spark = spark
         self.path = path
         self.bucket_ms = bucket_ms
         self.summary_path = summary_path
-
-    def _summary(self) -> DataFrame | None:
-        if self.summary_path is None:
-            return None
-        try:
-            return self.spark.read.parquet(self.summary_path)
-        except Exception:
-            return None  # not materialized yet -> fall back to log scan
 
     # -- write path ---------------------------------------------------------
     def store(self, df: DataFrame) -> None:
@@ -72,9 +68,8 @@ class Storage:
         incoming = with_bucket(df, bucket_ms=self.bucket_ms).dropDuplicates(
             MESSAGE_ID_COLUMNS
         )
-        try:
-            existing = read_stream_data(self.spark, self.path)
-        except Exception:  # first write: nothing to dedup against
+        existing = self._written_log()
+        if existing is None:  # first write: nothing to dedup against
             write_stream_data(df.dropDuplicates(MESSAGE_ID_COLUMNS), self.path,
                               bucket_ms=self.bucket_ms)
             return
@@ -86,17 +81,22 @@ class Storage:
         write_stream_data(fresh, self.path, bucket_ms=self.bucket_ms)
 
     # -- read path ----------------------------------------------------------
-    def _log(self) -> DataFrame:
-        """The message log; a not-yet-written log reads as an empty frame
-        (a fresh broker answers resends with NoResend, it doesn't 500 —
-        cf. the reference's empty-result tests, Storage.test.ts:95-121)."""
-        try:
-            return read_stream_data(self.spark, self.path)
-        except Exception:
-            from broker_spark.schema import STREAM_MESSAGE_SCHEMA
+    def _written_log(self) -> DataFrame | None:
+        """The message log, or None when nothing has been written to it."""
+        return if_written(lambda: read_stream_data(self.spark, self.path))
 
-            empty = self.spark.createDataFrame([], STREAM_MESSAGE_SCHEMA)
-            return empty.withColumn("bucket", F.lit(0).cast("long")).filter(F.lit(False))
+    def _log(self) -> DataFrame:
+        """The message log; a log with nothing written reads as an empty
+        frame (a fresh broker answers resends with NoResend, it doesn't
+        500 — cf. the reference's empty-result tests, Storage.test.ts:
+        95-121).  Any other read failure raises."""
+        log = self._written_log()
+        if log is not None:
+            return log
+        from broker_spark.schema import STREAM_MESSAGE_SCHEMA
+
+        empty = self.spark.createDataFrame([], STREAM_MESSAGE_SCHEMA)
+        return empty.withColumn("bucket", F.lit(0).cast("long")).filter(F.lit(False))
 
     def request_last(self, stream_id: str, partition: int, n: int) -> DataFrame:
         return resend.request_last(
@@ -155,75 +155,41 @@ class Storage:
         return df.toLocalIterator(prefetchPartitions=True)
 
     # -- metadata (src/http/DataMetadataEndpoints.ts:21-26) -----------------
-    def get_first_message_ts(self, stream_id: str, partition: int) -> DataFrame:
-        s = self._summary()
-        if s is not None:
-            return (
-                s.filter((F.col("stream_id") == stream_id) & (F.col("partition") == partition))
-                .agg(F.min("date_create").alias("first_ts"))
-            )
-        return metadata.first_message_ts(self._log(), stream_id, partition)
-
-    def get_last_message_ts(self, stream_id: str, partition: int) -> DataFrame:
-        s = self._summary()
-        if s is not None:
-            return (
-                s.filter((F.col("stream_id") == stream_id) & (F.col("partition") == partition))
-                .agg(F.max("max_ts").alias("last_ts"))
-            )
-        return metadata.last_message_ts(self._log(), stream_id, partition)
-
-    def get_number_of_messages(self, stream_id: str) -> DataFrame:
-        s = self._summary()
-        if s is not None:
-            return (
-                s.filter(F.col("stream_id") == stream_id)
-                .groupBy("stream_id", "partition")
-                .agg(F.sum("records").alias("records"))
-            )
-        return metadata.message_count(self._log(), stream_id)
-
-    def get_total_bytes(self, stream_id: str) -> DataFrame:
-        s = self._summary()
-        if s is not None:
-            return (
-                s.filter(F.col("stream_id") == stream_id)
-                .groupBy("stream_id", "partition")
-                .agg(F.sum("size").alias("total_bytes"))
-            )
-        return metadata.total_bytes(self._log(), stream_id)
+    def _summary_rows(self) -> DataFrame:
+        """The rollup's source: the maintained summary when `summary_path`
+        can be read, otherwise the log's one-message summary rows (bucketed
+        by the log's own `bucket` partition column)."""
+        if self.summary_path is not None:
+            summary = if_written(lambda: self.spark.read.parquet(self.summary_path))
+            if summary is not None:
+                return summary
+        return metadata.message_rows(self._log())
 
     def bucket_index(self) -> DataFrame:
-        s = self._summary()
-        if s is not None:
-            return s
-        return metadata.bucket_index(self._log(), bucket_ms=self.bucket_ms)
+        """One summary row per (stream, partition, bucket)."""
+        return metadata.summarize(self._summary_rows(), *metadata.BUCKET_KEYS)
+
+    def partition_summary(self, stream_id: str, partition: int) -> DataFrame:
+        """One row: the summary of one stream-partition — the frame behind
+        `partition_metadata`."""
+        rows = self._summary_rows().filter(
+            (F.col("stream_id") == stream_id) & (F.col("partition") == partition)
+        )
+        return metadata.summarize(rows)
 
     def partition_metadata(self, stream_id: str, partition: int) -> dict:
         """The metadata-endpoint payload (src/http/DataMetadataEndpoints.ts:
-        21-26), one aggregation pass; values are plain Python for JSON."""
-        s = self._summary()
-        if s is not None:
-            agg = (
-                s.filter((F.col("stream_id") == stream_id) & (F.col("partition") == partition))
-                .agg(
-                    F.sum("size").alias("totalBytes"),
-                    F.sum("records").alias("totalMessages"),
-                    F.unix_millis(F.min("date_create")).alias("firstMessage"),
-                    F.unix_millis(F.max("max_ts")).alias("lastMessage"),
-                )
-            )
-            row = agg.collect()[0]
-            return {
-                "totalBytes": row["totalBytes"] or 0,
-                "totalMessages": row["totalMessages"] or 0,
-                "firstMessage": row["firstMessage"],
-                "lastMessage": row["lastMessage"],
-            }
-        row = metadata.partition_metadata(self._log(), stream_id, partition).collect()[0]
+        21-26) in one aggregation pass — the reference issues four queries;
+        values are plain Python for JSON."""
+        row = self.partition_summary(stream_id, partition).selectExpr(
+            "size",
+            "records",
+            "unix_millis(date_create) AS first",
+            "unix_millis(max_ts) AS last",
+        ).collect()[0]
         return {
-            "totalBytes": row["totalBytes"] or 0,
-            "totalMessages": row["totalMessages"],
-            "firstMessage": row["firstMessage"],
-            "lastMessage": row["lastMessage"],
+            "totalBytes": row["size"] or 0,
+            "totalMessages": row["records"] or 0,
+            "firstMessage": row["first"],
+            "lastMessage": row["last"],
         }

@@ -18,6 +18,9 @@ order (src/storage/Storage.ts:111).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,6 +30,11 @@ from broker_spark.schema import (
     PARTITION_COLUMNS,
     with_bucket,
 )
+
+#: Spark's conditions for a location nothing has been written to yet: the
+#: path does not exist, or its tree holds no data files (e.g. retention
+#: dropped every bucket).
+_NOTHING_WRITTEN = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 
 def write_stream_data(
@@ -175,3 +183,15 @@ def read_stream_data(
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     return reader.parquet(path)
+
+
+def if_written(read: Callable[[], DataFrame]) -> DataFrame | None:
+    """`read()`, or None when it fails only because nothing has been
+    written there yet.  Every other failure (an unreadable file, a
+    filesystem error) raises: an empty answer must mean an empty log."""
+    try:
+        return read()
+    except AnalysisException as e:
+        if e.getCondition() in _NOTHING_WRITTEN:
+            return None
+        raise

@@ -83,6 +83,16 @@ def test_interval_counts_closing_delta_same_bucket(spark):
     assert got[base + 24] == 1
 
 
+def test_interval_form_skips_null_ts(spark):
+    # a user whose only timestamp is NULL counts in no window; the
+    # interval form used to fail with INVALID_INDEX_OF_ZERO here
+    df = spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 1)), (2, None)], "user_id long, ts timestamp"
+    )
+    iv = _counts(rollup.trailing_distinct_users_interval(df))
+    assert iv == _counts(rollup.trailing_distinct_users(df)) == {473352: 1}
+
+
 def test_layout_pruning_multidim_shape_and_bounds(spark):
     """layout_pruning_multidim (catalog) on sf0.001: three manifest rows
     (by_user / by_time / zorder), and the classic dominance result — a

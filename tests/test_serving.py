@@ -246,6 +246,27 @@ def test_metadata_endpoint(base_url):
     assert meta["totalBytes"] == sum(len('{"v": 1}') for _ in range(3))
 
 
+def test_unreadable_log_answers_500(spark, tmp_path):
+    """A log that cannot be opened is a storage failure — the reference's
+    500 — not an empty resend or `totalMessages: 0`."""
+    path = tmp_path / "unreadable"
+    path.mkdir()
+    (path / "part-00000.parquet").write_bytes(b"not parquet")
+    server = serving_http.serve(Storage(spark, str(path)))
+    host, port = server.server_address
+    try:
+        for suffix in (
+            "data/partitions/0/last?count=5",
+            "data/partitions/0/from?fromTimestamp=0",
+            "data/partitions/0/range?fromTimestamp=0&toTimestamp=5000",
+            "metadata/partitions/0",
+        ):
+            status, _, body = _get(f"http://{host}:{port}/streams/s1/{suffix}")
+            assert (status, json.loads(body)) == (500, {"error": "Failed to fetch data!"})
+    finally:
+        server.shutdown()
+
+
 def test_metadata_partition_not_a_number(base_url):
     status, _, body = _get(f"{base_url}/streams/s1/metadata/partitions/x")
     assert status == 400

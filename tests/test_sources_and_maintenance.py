@@ -8,13 +8,10 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from broker_spark.functions.skew import salted_agg
+from broker_spark.operators.metadata import bucket_index
 from broker_spark.schema import STREAM_MESSAGE_SCHEMA
 from broker_spark.sources.rate import rate_stream, with_envelope
-from broker_spark.streaming.maintenance import (
-    batch_bucket_partials,
-    foreach_batch_bucket_index,
-    merge_summary,
-)
+from broker_spark.streaming.maintenance import foreach_batch_bucket_index
 from tests.conftest import make_msg
 
 ENVELOPE = (
@@ -95,8 +92,9 @@ class TestBucketIndexMaintenance:
 
     def test_partials_shape(self, spark):
         b = spark.createDataFrame([make_msg("s", 2, 5000, 1)], ENVELOPE)
-        out = batch_bucket_partials(b, bucket_ms=1000).collect()
+        out = bucket_index(b, bucket_ms=1000).collect()
         assert len(out) == 1 and out[0]["bucket"] == 5 and out[0]["partition"] == 2
+        assert out[0]["records"] == 1 and out[0]["date_create"] == out[0]["max_ts"]
 
     def test_streaming_end_to_end(self, spark, tmp_path):
         """File stream -> foreachBatch maintenance -> summary answers the

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from broker_spark.operators import metadata, retention
+from broker_spark.operators import retention
 from broker_spark.schema import STREAM_MESSAGE_SCHEMA
 from broker_spark.storage.store import Storage
 from tests.conftest import ids, make_msg
@@ -52,17 +52,12 @@ def test_partition_pruning_in_plan(store):
 
 
 def test_metadata_aggregates(store):
-    first = store.get_first_message_ts("s1", 0).collect()[0]["first_ts"]
-    last = store.get_last_message_ts("s1", 0).collect()[0]["last_ts"]
-    assert int(first.timestamp() * 1000) == 0
-    assert int(last.timestamp() * 1000) == 9500
-    counts = {
-        (r["stream_id"], r["partition"]): r["records"]
-        for r in store.get_number_of_messages("s1").collect()
+    assert store.partition_metadata("s1", 0) == {
+        "totalBytes": 40 * len('{"hello":"world"}'),
+        "totalMessages": 40,
+        "firstMessage": 0,
+        "lastMessage": 9500,
     }
-    assert counts == {("s1", 0): 40}
-    total = store.get_total_bytes("s1").collect()[0]["total_bytes"]
-    assert total == 40 * len('{"hello":"world"}')
 
 
 def test_bucket_index_counters(store):
@@ -104,3 +99,38 @@ def test_empty_storage_reads_gracefully(spark, tmp_path):
     assert st.request_from("s", 0, 0).collect() == []
     meta = st.partition_metadata("s", 0)
     assert meta["totalMessages"] == 0 and meta["firstMessage"] is None
+
+
+def test_emptied_log_reads_gracefully(spark, tmp_path):
+    """A log tree whose every bucket retention dropped holds no data files:
+    it reads as empty, and the next idempotent write starts it afresh."""
+    st = Storage(spark, str(tmp_path / "emptied"), bucket_ms=1000)
+    st.store(spark.createDataFrame([make_msg("s", 0, 1000, 0)], STREAM_MESSAGE_SCHEMA))
+    cfg = spark.createDataFrame([("s", 1)], ["stream_id", "storage_days"])
+    expired = retention.expired_buckets(st.bucket_index(), cfg, 10 * 86_400_000)
+    assert len(retention.drop_expired_partitions(spark, st.path, expired)) == 1
+    assert st.request_last("s", 0, 5).collect() == []
+    assert st.partition_metadata("s", 0) == {
+        "totalBytes": 0, "totalMessages": 0, "firstMessage": None, "lastMessage": None,
+    }
+    st.store_idempotent(
+        spark.createDataFrame([make_msg("s", 0, 2000, 0)], STREAM_MESSAGE_SCHEMA)
+    )
+    assert st.partition_metadata("s", 0)["totalMessages"] == 1
+
+
+def test_unreadable_log_raises(spark, tmp_path):
+    """Only a missing or file-less log is empty; a log that cannot be
+    opened raises instead of answering an empty resend."""
+    path = tmp_path / "unreadable"
+    path.mkdir()
+    (path / "part-00000.parquet").write_bytes(b"not parquet")
+    st = Storage(spark, str(path), bucket_ms=1000)
+    with pytest.raises(Exception):
+        st.request_last("s", 0, 5)
+    with pytest.raises(Exception):
+        st.partition_metadata("s", 0)
+    with pytest.raises(Exception):
+        st.store_idempotent(
+            spark.createDataFrame([make_msg("s", 0, 1000, 0)], STREAM_MESSAGE_SCHEMA)
+        )

@@ -26,22 +26,43 @@ def stack(spark, tmp_path):
 
 
 class TestVolumeLogger:
-    def test_summary_rates_from_counters(self):
+    def test_summary_rates_from_counters(self, spark, tmp_path):
+        """The storage rates read the counters the spool and the gateway
+        record: a real flush and a real HTTP resend move them."""
+        import urllib.request
+
+        from broker_spark.serving import http as serving_http
+        from broker_spark.serving.publish import PublishRequest
+
         ctx = MetricsContext()
+        st = Storage(spark, str(tmp_path / "rates-log"), bucket_ms=86_400_000)
+        spool = PublishSpool(st, partition_count=1, close_timeout_s=60.0, metrics=ctx)
+        for i in range(10):
+            spool.publish(PublishRequest("rates", '{"i":%d}' % i, T0 + i), now_ms=T0 + 10)
+        spool.flush()
+        server = serving_http.serve(st, metrics=ctx)
+        host, port = server.server_address
+        try:
+            urllib.request.urlopen(
+                f"http://{host}:{port}/streams/rates/data/partitions/0/last?count=10",
+                timeout=120,
+            ).read()
+        finally:
+            server.shutdown()
         ctx.record("publisher.messages", 100)
         ctx.record("publisher.bytes", 50_000)
-        ctx.record("storage.writeCount", 10)
         vl = VolumeLogger(ctx, node_address="0xnode")
         s = vl.report_and_reset(now_ms=T0)
         assert s["peerId"] == "0xnode" and s["timestamp"] == T0
-        # rates are per-second over a sub-second window -> strictly positive,
-        # and kb fields are exactly bytes/1000
+        # rates are per-second over one window -> strictly positive, and kb
+        # fields are exactly bytes/1000
         assert s["inPerSecond"] > 0
         assert s["kbInPerSecond"] == pytest.approx(
             ctx._last["publisher.bytes"] / 1000.0
             * (s["inPerSecond"] / ctx._last["publisher.messages"])
         )
-        assert s["storageWritePerSecond"] > 0
+        assert s["storageWritePerSecond"] > 0 and s["storageWriteKbPerSecond"] > 0
+        assert s["storageReadPerSecond"] > 0 and s["storageReadKbPerSecond"] > 0
         assert s["outPerSecond"] == 0.0  # nothing recorded on the out side
 
     def test_sample_is_destructive(self):
