@@ -325,7 +325,6 @@ NOT_BENCHED_SIBLING_REASONS = {
     "customers_with_open_orders": "semi-join form of the same customer/orders family (EXCEPT/INTERSECT triplet)",
     "customers_without_pending_orders": "anti-join form of the same customer/orders family (EXCEPT/INTERSECT triplet)",
     "cusum_daily_alarms": "CUSUM variant over the same daily-counts scan as benched dow_adjusted_anomalies",
-    "dedup_components": "iterative-CC form superseded by benched dedup_components_incremental",
     "dedup_components_star": "star-CC form superseded by benched dedup_components_incremental",
     "dedup_containment": "containment variant of benched dedup_ngram_jaccard_guarded (same shingle explode)",
     "dedup_edit_distance_pairs": "edit-distance verify stage over the candidates benched as dedup_prefix_filter_pairs",

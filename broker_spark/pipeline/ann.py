@@ -72,13 +72,20 @@ def _as_double_sql(arr: str) -> str:
     return f"transform({arr}, v -> CAST(v AS DOUBLE))"
 
 
+def quote_ident(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier, so a name with
+    spaces, dashes or backticks survives interpolation into a fragment."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def dot_sql(a: str, b: str) -> str:
-    """SQL fragment form of `dot` — IDENTICAL analyzed expression, built
-    in ONE Py4J round-trip via F.expr instead of ~10 higher-order-function
-    constructions at ~60 ms of gateway latency per cosine (measured r14;
-    the lit_vector recipe, applied to the expression tree itself).  The
-    0.0D literal is the DOUBLE zero `F.lit(0.0)` builds (a bare 0.0
-    would parse as DECIMAL and change the fold arithmetic)."""
+    """SQL fragment: left-to-right fold of the elementwise product of the
+    vector fragments `a` and `b`, in double; NULL when either is NULL or
+    their lengths differ.  One F.expr parse instead of ~10
+    higher-order-function constructions at ~60 ms of gateway latency per
+    cosine (measured r14; the lit_vector recipe, applied to the
+    expression tree itself).  The 0.0D literal is the DOUBLE zero (a bare
+    0.0 would parse as DECIMAL and change the fold arithmetic)."""
     return (
         f"aggregate(zip_with({_as_double_sql(a)}, {_as_double_sql(b)}, "
         f"(x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
@@ -90,32 +97,17 @@ def norm_sql(a: str) -> str:
 
 
 def cosine_sql(a: str, b: str) -> str:
-    return f"({dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)}))"
+    """NULL when either vector has norm 0, as in the DuckDB oracles
+    (`x / 0.0` is NULL there; a plain divide raises DIVIDE_BY_ZERO under
+    ANSI mode)."""
+    return f"try_divide({dot_sql(a, b)}, {norm_sql(a)} * {norm_sql(b)})"
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Left-to-right fold of the elementwise product, in double.  String
-    args are SQL fragments routed through `dot_sql` (one Py4J call,
-    value-identical — pinned by tests/test_round14_opt.py)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(dot_sql(a, b))
-    return F.aggregate(
-        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(norm_sql(a))
-    return F.sqrt(F.aggregate(_as_double(a), F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(cosine_sql(a, b))
-    return dot(a, b) / (norm(a) * norm(b))
+def cosine(a: str, b: str) -> Column:
+    """`cosine_sql` as a Column.  `a` and `b` are SQL fragments (a column
+    name, `slice(v, 1, 4)`, ...) interpolated as given; quote a
+    caller-supplied column name with `quote_ident` first."""
+    return F.expr(cosine_sql(a, b))
 
 
 def brute_force_topk(
@@ -1439,7 +1431,7 @@ def rp_lsh_topk(
         # produced: same literal matrix (from_json constant-folds), same
         # fold order, same sign rule; 0.0D is the DOUBLE literal
         # F.lit(0.0) built.  Value identity pinned by
-        # tests/test_round14_opt.py.
+        # tests/test_round14_opt.py.  `vec` arrives backtick-quoted.
         import json as _json
 
         mat_json = _json.dumps([[float(v) for v in r] for r in planes[table]])
@@ -1460,7 +1452,9 @@ def rp_lsh_topk(
         return df.select(
             F.col(id_col).alias(f"{prefix}_id"),
             F.posexplode(
-                F.array(*[bucket(vec_col, t) for t in range(len(planes))])
+                F.array(
+                    *[bucket(quote_ident(vec_col), t) for t in range(len(planes))]
+                )
             ).alias("t", "bucket"),
         )
 

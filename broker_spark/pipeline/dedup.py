@@ -35,12 +35,22 @@ DEFAULT_MAX_BUCKET_SIZE = 8
 
 
 def word_shingles_sql(text: str, k: int = DEFAULT_SHINGLE) -> str:
-    """SQL fragment form of `word_shingles` — the IDENTICAL analyzed
-    expression, built in ONE F.expr parse instead of ~120 Py4J
-    round-trips of higher-order-function construction (~30 ms of pure
-    gateway latency per call, paid on every bench run of every shingle
-    entry — measured r14).  Value identity is pinned by
-    tests/test_round14_opt.py."""
+    """SQL fragment: word k-gram shingles of `text` (itself a SQL
+    fragment, e.g. the column name "text" — interpolated as given), one
+    `concat_ws(' ', words[i..i+k-1])` per window start; an empty array
+    when the doc has fewer than k words, NULL text included.
+
+    The split is bound ONCE per row through an outer lambda variable:
+    codegen does no CSE inside lambda bodies, so referencing `split(text)`
+    directly from the inner transform re-tokenizes the text per shingle —
+    measured ~2x on the shingle-exploding operators.  Each window is k
+    direct `element_at` reads into one `concat_ws` (no per-window slice
+    allocation + array_join walk — measured ~18% on the explode stage,
+    byte-identical output), which keeps the interpreted higher-order
+    evaluation this family's scans are bound by as lean as it gets.
+    Built as one F.expr parse: the same tree from Column higher-order
+    functions cost ~120 Py4J round-trips (~30 ms per call, measured
+    r14)."""
     win = ", ".join(f"element_at(words, i + {j})" for j in range(k))
     return (
         f"element_at(transform(array(split({text}, ' ')), words -> "
@@ -51,79 +61,37 @@ def word_shingles_sql(text: str, k: int = DEFAULT_SHINGLE) -> str:
     )
 
 
-def word_shingles(text: Column | str, k: int = DEFAULT_SHINGLE) -> Column:
-    """Word k-gram shingles: `concat_ws(' ', words[i..i+k-1])` for each
-    window start.  Empty array when the doc has fewer than k words.
-
-    String args are SQL fragments routed through `word_shingles_sql`
-    (one Py4J call, value-identical).  For Column args the tree is built
-    in Python:
-
-    The split is bound ONCE per row through an outer lambda variable:
-    codegen does no CSE inside lambda bodies, so referencing `split(text)`
-    directly from the inner transform re-tokenizes the text per shingle —
-    measured ~2x on the shingle-exploding operators.  Each window is k
-    direct `element_at` reads into one `concat_ws` (no per-window slice
-    allocation + array_join walk — measured ~18% on the explode stage,
-    byte-identical output), which keeps the interpreted higher-order
-    evaluation this family's scans are bound by as lean as it gets."""
-    if isinstance(text, str):
-        return F.expr(word_shingles_sql(text, k))
-
-    def _shingles(words: Column) -> Column:
-        n = F.size(words)
-        idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(0)))
-        return F.when(
-            n >= k,
-            F.transform(
-                idx,
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(words, i + j) for j in range(k)]
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    return F.element_at(
-        F.transform(F.array(F.split(text, " ")), _shingles), 1
-    )
+def word_shingles(text: str, k: int = DEFAULT_SHINGLE) -> Column:
+    """`word_shingles_sql` as a Column; `text` is a SQL fragment."""
+    return F.expr(word_shingles_sql(text, k))
 
 
 def minhash_signature(
-    text: Column | str,
+    text: str,
     num_hashes: int = DEFAULT_NUM_HASHES,
     shingle: int = DEFAULT_SHINGLE,
 ) -> list[Column]:
-    """MinHash signature: hash function j is the j-th 8-hex-char slice of
+    """MinHash signature of `text` (a SQL fragment, as in
+    `word_shingles_sql`): hash function j is the j-th 8-hex-char slice of
     ONE md5 digest per shingle — 32 independent bits each, min taken in
-    lexicographic hex order (a valid permutation-min).
+    lexicographic hex order (a valid permutation-min).  A doc with no
+    shingles (fewer words than `shingle`, NULL text) gets NULL `mh*`.
 
     One digest per shingle instead of num_hashes seeded digests: 4x less
     hashing on the corpus scan, measured ~4x wall-clock on the signature
     stage.  md5 (not murmur/xxhash) keeps the operator bit-identical
     across engines and therefore oracle-checkable.  num_hashes <= 4 per
-    digest (128 bits / 32); NB transform's lambda must take exactly one
-    arg — a second would bind the array index.
+    digest (128 bits / 32).  One F.expr parse per hash (the Column
+    higher-order-function chain cost ~60 ms of Py4J latency per
+    signature — measured r14).
     """
     if num_hashes > 4:
         raise ValueError("num_hashes > 4 needs more than one digest per shingle")
-    if isinstance(text, str):
-        # one F.expr parse per hash instead of the HOF construction
-        # chain (~60 ms of Py4J latency per signature — measured r14);
-        # identical analyzed tree, pinned by tests/test_round14_opt.py
-        digests_sql = (
-            f"transform({word_shingles_sql(text, shingle)}, s -> md5(s))"
-        )
-        return [
-            F.expr(
-                f"array_min(transform({digests_sql}, "
-                f"d -> substring(d, {1 + 8 * j}, 8)))"
-            ).alias(f"mh{j}")
-            for j in range(num_hashes)
-        ]
-    digests = F.transform(word_shingles(text, shingle), lambda s: F.md5(s))
+    digests_sql = f"transform({word_shingles_sql(text, shingle)}, s -> md5(s))"
     return [
-        F.array_min(
-            F.transform(digests, lambda d: F.substring(d, 1 + 8 * j, 8))
+        F.expr(
+            f"array_min(transform({digests_sql}, "
+            f"d -> substring(d, {1 + 8 * j}, 8)))"
         ).alias(f"mh{j}")
         for j in range(num_hashes)
     ]
@@ -490,80 +458,6 @@ def ngram_containment_pairs(
     )
 
 
-def connected_components(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Near-dup clusters from candidate pairs: connected components by
-    min-label propagation, run to fixpoint.
-
-    The step every corpus-scale dedup pipeline needs after pair
-    generation: pairs only say "a ~ b"; keeping one doc per GROUP requires
-    the transitive closure (a~b, b~c => {a,b,c} is one cluster).
-
-    Shape per iteration: propagate each node's current label across edges
-    (one shuffle on the edge key), take the min of own and neighbor
-    labels, and stop when no label changed — O(cluster diameter)
-    iterations, and near-dup clusters are shallow (a duplicate family's
-    diameter is small even when the family is large).  At extreme scale
-    swap in the large-star/small-star contraction, which is O(log d);
-    the result (min reachable id per node) is identical.
-
-    Returns (id_col, component) for every document; singletons are their
-    own component.  Deterministic — equals exact connected components —
-    so the DuckDB oracle is a recursive CTE.
-
-    Only documents that appear in a pair enter the propagation loop; the
-    (overwhelmingly larger, at corpus scale) singleton set joins the
-    result afterwards as its own components — the iteration cost scales
-    with the near-dup subgraph, not the corpus."""
-    ids = docs.select(id_col).distinct()
-    fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    edges = fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
-    paired_ids = edges.select(F.col("src").alias(id_col)).distinct()
-    labels = paired_ids.select(F.col(id_col), F.col(id_col).alias("component"))
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels[id_col])
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        # carry old + new through ONE materialized frame: the change count
-        # and the next labels both read it without a second join.
-        # localCheckpoint (not persist): `labels` appears twice per step,
-        # so the logical plan doubles every iteration — on deep components
-        # planning itself OOMs before the data is ever large.  Truncating
-        # the lineage each round keeps the plan constant-size (use
-        # checkpoint(dir) on a cluster for executor-loss resilience).
-        stepped = (
-            labels.join(neighbor_min, labels[id_col] == neighbor_min["src"], "left")
-            .select(
-                F.col(id_col),
-                F.col("component").alias("_old"),
-                F.least(
-                    F.col("component"), F.coalesce("nbr_component", F.col("component"))
-                ).alias("component"),
-            )
-            # pin_iter, not pin: the change-count action below executes
-            # THIS round's frame — an audit-stripped pin would make each
-            # count re-run the compounded lineage of all previous rounds
-            .transform(pin_iter)
-        )
-        changed = stepped.filter(F.col("component") != F.col("_old")).count()
-        labels = stepped.select(id_col, "component")
-        if changed == 0:
-            break
-    edges.unpersist()
-    singletons = ids.join(paired_ids, id_col, "left_anti").select(
-        F.col(id_col), F.col(id_col).alias("component")
-    )
-    return labels.unionByName(singletons)
-
-
 def dedup_cluster_keepers(
     docs: DataFrame,
     pairs: DataFrame,
@@ -573,11 +467,9 @@ def dedup_cluster_keepers(
     (= min doc id in the cluster, the keeper) with the cluster size.
     Downstream, a semi-join of docs against keepers drops the rest.
 
-    Rides `connected_components_star` (O(log n) rounds) rather than label
-    propagation (O(cluster diameter) rounds): at corpus scale chained
-    near-dup families make the diameter bound the wrong one.  The two CC
-    implementations are property-tested equal (tests/test_dedup.py), so
-    this is purely a physical-plan choice."""
+    Rides `connected_components_star`, whose labels are pinned to a
+    plain union-find on random graphs with deep chains
+    (tests/test_pipeline_ops.py)."""
     comp = connected_components_star(docs, pairs, id_col)
     return comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("cluster_size"),
@@ -683,11 +575,12 @@ def connected_components_star(
     max_iter: int = 30,
     local_threshold: int = CC_LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — the O(log n)-round algorithm that replaces
-    `connected_components`' O(cluster diameter) label propagation when
-    components can be deep (chained near-dup families at corpus scale).
+    """Near-dup clusters from candidate pairs: connected components by
+    alternating large-star / small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond").  Pairs only say
+    "a ~ b"; keeping one doc per GROUP needs the transitive closure, and
+    O(log n) rounds (not label propagation's O(cluster diameter)) keep
+    chained near-dup families at corpus scale cheap.
 
     Two-level execution (the shape the Kiveris paper's two-phase variant
     and production CC systems use): if the deduplicated edge set is small
@@ -703,12 +596,13 @@ def connected_components_star(
       the minimum, forming stars.
     Terminates when the edge multiset stops changing; the surviving edges
     are (node -> component minimum).  Both paths produce identical labels
-    (min reachable id per node) — property-tested against each other and
-    against label propagation, and oracle-checked by the same recursive
-    CTE.
+    (min reachable id per node) — property-tested against a plain
+    union-find, and oracle-checked by a recursive CTE.
 
-    Same singleton policy: only paired nodes iterate; singletons union in
-    afterwards as their own components."""
+    Returns (id_col, component) for every document.  Only paired nodes
+    iterate; the (at corpus scale far larger) singleton set unions in
+    afterwards as its own components, so the cost scales with the
+    near-dup subgraph, not the corpus."""
     ids = docs.select(id_col).distinct()
     fwd = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     edges = (
@@ -2452,14 +2346,12 @@ def incremental_components(
     min-ids of their components and the meta-CC takes min reachable
     label, the final labeling is exactly the full-recompute labeling —
     the certificate entry proves it hash-identical against the same
-    recursive-CTE oracle as `dedup_components`.  At 100 TB a nightly
+    recursive-CTE oracle as `dedup_components_star`.  At 100 TB a nightly
     crawl's delta touches the bridge graph, never the corpus.
 
-    Both CC solves go through the star/union-find two-level path
-    (identical labels to label propagation, property-tested): at test
-    scale each collapses to one bounded collect instead of
-    O(diameter) convergence-probe jobs, and at corpus scale the
-    contraction rounds are O(log n).
+    Both CC solves go through the star/union-find two-level path: at
+    test scale each collapses to one bounded collect, and at corpus
+    scale the contraction rounds are O(log n).
 
     `base` is materialized once (localCheckpoint): four readers follow
     (both bridge endpoint maps, the meta-node set, the final relabel

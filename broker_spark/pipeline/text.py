@@ -564,15 +564,11 @@ def split_assignment(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def _stopword_hits(words: Column, lang: str) -> Column:
-    vocab = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(F.filter(words, lambda w: F.array_contains(vocab, w)))
-
-
 def _stopword_hits_sql(words: str, lang: str) -> str:
-    """SQL fragment form of `_stopword_hits` — the identical analyzed
-    tree in one F.expr parse instead of ~25 Py4J round-trips per
-    language (r14 construction recipe; pinned by
+    """SQL fragment: how many elements of the string array `words` (a SQL
+    fragment) are `lang` stopwords.  One F.expr parse instead of ~25 Py4J
+    round-trips per language through Column functions (r14
+    construction recipe; pinned against a plain-Python count by
     tests/test_round14_opt.py)."""
     arr = ", ".join(f"'{w}'" for w in STOPWORDS[lang])
     return f"size(filter({words}, w -> array_contains(array({arr}), w)))"

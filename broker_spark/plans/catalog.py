@@ -1061,30 +1061,16 @@ _CC_SQL_PREFIX = f"""
 
 
 @register(
-    "dedup_components",
-    _CC_SQL_PREFIX + "SELECT doc_id, component FROM comp",
-)
-def q_dedup_components(spark, sf_dir):
-    """Near-dup clusters: connected components (min-label propagation to
-    fixpoint) over the MinHash-LSH candidate pairs — the transitive step
-    that turns pairwise "a ~ b" into keep-one-per-group dedup.  The oracle
-    is DuckDB's recursive CTE (exact min-reachable-id components); the
-    Spark side iterates O(cluster diameter) label-propagation rounds, each
-    one edge-key shuffle."""
-    docs = load(spark, sf_dir, "documents")
-    return dedup.connected_components(docs, dedup.minhash_lsh_pairs(docs))
-
-
-@register(
     "dedup_components_star",
     _CC_SQL_PREFIX + "SELECT doc_id, component FROM comp",
 )
 def q_dedup_components_star(spark, sf_dir):
-    """Connected components by large-star/small-star contraction — the
-    O(log n)-round alternative to `dedup_components`' O(diameter) label
-    propagation, for corpora whose near-dup families chain deep.  Same
-    result (min reachable id), same recursive-CTE oracle; property-tested
-    equal to the propagation version on random graphs."""
+    """Near-dup clusters: connected components over the MinHash-LSH
+    candidate pairs — the transitive step that turns pairwise "a ~ b"
+    into keep-one-per-group dedup.  Large-star/small-star contraction
+    (O(log n) rounds), or a local union-find when the edge set is
+    small; the oracle is DuckDB's recursive CTE (exact min-reachable-id
+    components)."""
     docs = load(spark, sf_dir, "documents")
     return dedup.connected_components_star(docs, dedup.minhash_lsh_pairs(docs))
 
@@ -4729,8 +4715,8 @@ def q_bigram_logprob_score(spark, sf_dir):
 )
 def q_dedup_graph_degrees(spark, sf_dir):
     """Degree distribution of the near-dup candidate graph — the shape
-    diagnostic that decides between O(diameter) label propagation and
-    O(log n) star contraction, and flags boilerplate hubs (high-degree
+    diagnostic that decides how deep connected components can chain,
+    and flags boilerplate hubs (high-degree
     nodes).  Runs the DEFAULT-guarded pair generator (the zero-config
     path, VERDICT r8 #2); the oracle carries the same bucket cap."""
     pairs = dedup.minhash_lsh_pairs(load(spark, sf_dir, "documents"))

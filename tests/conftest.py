@@ -16,6 +16,34 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
 
 
+def union_find_components(nodes, edges) -> dict:
+    """Reference connected components: {node: min node id of its
+    component} by plain union-find — what every CC operator must return."""
+    parent = {x: x for x in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def random_graph_with_chains(rng, n: int, n_random: int, chain_len: int) -> list:
+    """Sorted undirected edges over nodes 0..n-1: up to `n_random` random
+    edges plus one chain of `chain_len` edges through randomly ordered
+    nodes, so a component's diameter spans many contraction rounds."""
+    edges = {tuple(sorted(rng.sample(range(n), 2))) for _ in range(n_random)}
+    path = rng.sample(range(n), chain_len + 1)
+    edges |= {tuple(sorted(p)) for p in zip(path, path[1:])}
+    return sorted(edges)
+
+
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
     s = get_spark(app_name="broker-spark-tests", master="local[4]", shuffle_partitions=4)

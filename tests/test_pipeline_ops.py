@@ -133,10 +133,13 @@ class TestConnectedComponents:
         pairs = spark.createDataFrame(
             [(0, 1), (1, 2), (4, 5)], "doc_a long, doc_b long"
         )
-        from broker_spark.pipeline.dedup import connected_components, dedup_cluster_keepers
+        from broker_spark.pipeline.dedup import (
+            connected_components_star,
+            dedup_cluster_keepers,
+        )
 
         comp = {r["doc_id"]: r["component"]
-                for r in connected_components(docs, pairs).collect()}
+                for r in connected_components_star(docs, pairs).collect()}
         assert comp == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4, 6: 6}
 
         keepers = {r["keeper_doc_id"]: r["cluster_size"]
@@ -146,51 +149,30 @@ class TestConnectedComponents:
 
 class TestConnectedComponentsProperty:
     def test_matches_union_find_on_random_graphs(self, spark):
-        """Min-label propagation to fixpoint == exact connected components,
-        checked against a plain union-find on random graphs (including
-        chains deeper than one propagation round)."""
+        """Star CC == plain union-find on random graphs with deep chains
+        (where the O(log n) contraction needs several rounds), on both
+        execution paths: the local union-find and, with
+        local_threshold=0, the distributed star rounds."""
         import random
 
-        def union_find(n, edges):
-            parent = list(range(n))
+        from broker_spark.pipeline.dedup import connected_components_star
+        from tests.conftest import random_graph_with_chains, union_find_components
 
-            def find(x):
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for a, b in edges:
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-            # component id = min node id in the component
-            comp = {}
-            for x in range(n):
-                r = find(x)
-                comp.setdefault(r, []).append(x)
-            return {x: min(m) for r, m in comp.items() for x in m}
-
-        from broker_spark.pipeline.dedup import connected_components
-
-        rng = random.Random(7)
+        rng = random.Random(13)
         for trial in range(2):
-            n = 24
-            edges = sorted(
-                {tuple(sorted(rng.sample(range(n), 2))) for _ in range(rng.randint(5, 18))}
-            )
-            # add a chain so diameter > 1 propagation round
-            chain_base = rng.randrange(n - 4)
-            edges += [(chain_base + i, chain_base + i + 1) for i in range(3)]
-            expected = union_find(n, edges)
-
+            n = 30
+            edges = random_graph_with_chains(rng, n, rng.randint(4, 20), 8)
+            expected = union_find_components(range(n), edges)
             docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
             pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-            got = {
-                r["doc_id"]: r["component"]
-                for r in connected_components(docs, pairs).collect()
-            }
-            assert got == expected, f"trial {trial}: {got} != {expected}"
+            for threshold in (dedup.CC_LOCAL_EDGE_THRESHOLD, 0):
+                got = {
+                    r["doc_id"]: r["component"]
+                    for r in connected_components_star(
+                        docs, pairs, local_threshold=threshold
+                    ).collect()
+                }
+                assert got == expected, f"trial {trial}, threshold {threshold}"
 
 
 class TestQuantization:
@@ -436,45 +418,3 @@ class TestRepetitionAndPacking:
 
         rows = {r.stage: r.users for r in CATALOG["funnel_counts"].fn(spark, SF_SMALL).collect()}
         assert rows["view"] >= rows["click_after_view"] >= rows["purchase_after_click"]
-
-
-class TestStarContractionProperty:
-    def test_star_equals_propagation_on_random_graphs(self, spark):
-        """large-star/small-star contraction == min-label propagation ==
-        union-find, on random graphs including deep chains (where the
-        O(log n) contraction needs several rounds)."""
-        import random
-
-        from broker_spark.pipeline.dedup import (
-            connected_components,
-            connected_components_star,
-        )
-
-        rng = random.Random(13)
-        for trial in range(2):
-            n = 30
-            edges = sorted(
-                {tuple(sorted(rng.sample(range(n), 2))) for _ in range(rng.randint(4, 20))}
-            )
-            chain_base = rng.randrange(n - 8)
-            edges += [(chain_base + i, chain_base + i + 1) for i in range(7)]
-            docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-            pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-            prop = {
-                r["doc_id"]: r["component"]
-                for r in connected_components(docs, pairs).collect()
-            }
-            star_local = {
-                r["doc_id"]: r["component"]
-                for r in connected_components_star(docs, pairs).collect()
-            }
-            # local_threshold=0 forces the distributed star rounds — both
-            # execution paths must produce identical labels
-            star_dist = {
-                r["doc_id"]: r["component"]
-                for r in connected_components_star(
-                    docs, pairs, local_threshold=0
-                ).collect()
-            }
-            assert star_local == prop, f"trial {trial} (union-find path)"
-            assert star_dist == prop, f"trial {trial} (distributed path)"

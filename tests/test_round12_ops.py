@@ -97,7 +97,7 @@ class TestMaintainedPrefixIndex:
                 .select(
                     "doc_id",
                     F.explode(
-                        F.array_distinct(dedup.word_shingles(F.col("text")))
+                        F.array_distinct(dedup.word_shingles("text"))
                     ).alias("tok"),
                 )
                 .groupBy("tok")

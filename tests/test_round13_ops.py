@@ -122,7 +122,7 @@ class TestPrefixRangeLayout:
             for r in tiny.select(
                 "doc_id",
                 F.explode(
-                    F.array_distinct(dedup.word_shingles(F.col("text")))
+                    F.array_distinct(dedup.word_shingles("text"))
                 ).alias("tok"),
             )
             .select(dedup._range_of(F.col("tok"), los).alias("rid"))

@@ -109,9 +109,15 @@ class TestLocalLabelLift:
         plan = labels._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan and "PythonRDD" not in plan
         assert "Scan ExistingRDD" not in plan
-        # labels == label propagation (the standing CC equivalence)
-        lp = dedup.connected_components(docs, pairs)
-        assert _rows(labels) == _rows(lp)
+        # labels == a plain union-find over the same pairs
+        from tests.conftest import union_find_components
+
+        want = union_find_components(
+            [r["doc_id"] for r in docs.select("doc_id").collect()],
+            [(r["doc_a"], r["doc_b"]) for r in pairs.collect()],
+        )
+        got = {r["doc_id"]: r["component"] for r in labels.collect()}
+        assert got == want
 
     def test_string_ids_roundtrip_exactly(self, spark):
         rows = [("c:a\"b\\c", "d:x y"), ("d:x y", "c:ünï¢ødé")]
@@ -174,7 +180,7 @@ class TestTfidfDfDerivation:
         from broker_spark.pipeline.dedup import word_shingles
 
         terms = docs.select(
-            "doc_id", F.explode(word_shingles(F.col("text"), 3)).alias("term")
+            "doc_id", F.explode(word_shingles("text", 3)).alias("term")
         )
         tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
         via_tf = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))

@@ -5,6 +5,10 @@ once the input scan is already wide)."""
 
 from __future__ import annotations
 
+import hashlib
+import math
+
+import pytest
 from pyspark.sql import functions as F
 
 from broker_spark.tables import _size_bytes, est_scan_splits
@@ -52,67 +56,171 @@ class TestEstScanSplits:
         assert est_scan_splits(df) == 1  # restored conf: narrow again
 
 
+def _py_dot(a, b):
+    """Left-to-right double fold; NULL on a NULL side or element, or on
+    unequal lengths (zip_with pads the shorter side with NULL)."""
+    if a is None or b is None or len(a) != len(b) or None in a + b:
+        return None
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
+def _py_norm(a):
+    if a is None or None in a:
+        return None
+    acc = 0.0
+    for x in a:
+        acc += x * x
+    return math.sqrt(acc)
+
+
+def _py_cosine(a, b):
+    d, na, nb = _py_dot(a, b), _py_norm(a), _py_norm(b)
+    if d is None or na is None or nb is None or na * nb == 0.0:
+        return None
+    return d / (na * nb)
+
+
+def _py_shingles(text, k):
+    if text is None:
+        return []
+    w = text.split(" ")
+    return [" ".join(w[i : i + k]) for i in range(len(w) - k + 1)]
+
+
+def _py_minhash(text, j, k=3):
+    digests = [
+        hashlib.md5(s.encode("utf-8")).hexdigest() for s in _py_shingles(text, k)
+    ]
+    return min((d[8 * j : 8 * j + 8] for d in digests), default=None)
+
+
 class TestExprConstructionEquivalence:
-    """The r14 Py4J-latency fix: vector/shingle helpers accept SQL
-    fragments and build the IDENTICAL analyzed expression through one
-    F.expr parse (~0.5 ms) instead of nested higher-order-function
-    construction (~30-60 ms of gateway round-trips per call).  These
-    tests pin value identity between the two construction routes."""
+    """The single-parse expression helpers (one F.expr per expression,
+    not ~30-60 ms of Py4J round-trips of higher-order-function
+    construction), each pinned against a plain-Python reference on
+    hostile inputs."""
 
     def test_cosine_dot_norm(self, spark):
-        from broker_spark.pipeline.ann import cosine, dot, norm
+        from broker_spark.pipeline.ann import cosine, dot_sql, norm_sql
 
         rows = [
-            (float(i), [0.1 * i, -0.5, 2.5, 0.0], [1.0, 0.25 * i, -2.0, 3.5])
-            for i in range(1, 50)
+            ([0.1 * i, -0.5, 2.5, 0.0], [1.0, 0.25 * i, -2.0, 3.5])
+            for i in range(1, 20)
+        ] + [
+            ([0.0, 0.0], [1.0, 2.0]),  # zero vector: cosine NULL
+            ([0.0, 0.0], [0.0, 0.0]),
+            ([], []),  # empty: dot 0, cosine NULL
+            ([1.0, 2.0], [1.0, 2.0, 3.0]),  # unequal lengths: dot NULL
+            (None, [1.0, 2.0]),
+            ([1e-200, 3.0], [2.0, None]),  # NULL element: all NULL but norm(a)
         ]
-        df = spark.createDataFrame(rows, "id double, a array<double>, b array<double>")
-        py = df.select(
-            cosine(F.col("a"), F.col("b")).alias("c"),
-            dot(F.col("a"), F.col("b")).alias("d"),
-            norm(F.col("a")).alias("n"),
-        ).collect()
-        sql = df.select(
+        df = spark.createDataFrame(rows, "a array<double>, b array<double>")
+        got = df.select(
+            "a",
+            "b",
             cosine("a", "b").alias("c"),
-            dot("a", "b").alias("d"),
-            norm("a").alias("n"),
+            F.expr(dot_sql("a", "b")).alias("d"),
+            F.expr(norm_sql("a")).alias("n"),
         ).collect()
-        assert py == sql
+        assert len(got) == len(rows)
+        for r in got:
+            a, b = r["a"], r["b"]
+            assert r["d"] == _py_dot(a, b), (a, b)
+            assert r["n"] == _py_norm(a), a
+            assert r["c"] == _py_cosine(a, b), (a, b)
 
     def test_cosine_over_slices(self, spark):
         from broker_spark.pipeline.ann import cosine
 
         rows = [([0.5 * i, -1.0, 2.0, 0.25, -0.75, 1.5, 0.0, 3.0],) for i in range(12)]
+        rows.append(([0.0, 0.0, 0.0, 0.0, 1.0, 1.0, 1.0, 1.0],))
         df = spark.createDataFrame(rows, "v array<double>")
-        for d in (2, 4, 8):
-            py = df.select(
-                cosine(F.slice(F.col("v"), 1, d), F.slice(F.col("v"), 1, d)).alias("c")
+        for d in (2, 4, 8, 16):
+            got = df.select(
+                "v", cosine(f"slice(v, 1, {d})", f"slice(v, 1, {d})").alias("c")
             ).collect()
-            sql = df.select(
-                cosine(f"slice(v, 1, {d})", f"slice(v, 1, {d})").alias("c")
-            ).collect()
-            assert py == sql
+            for r in got:
+                assert r["c"] == _py_cosine(r["v"][:d], r["v"][:d]), (d, r["v"])
 
     def test_word_shingles_and_minhash(self, spark):
         from broker_spark.pipeline.dedup import minhash_signature, word_shingles
 
         texts = [
-            ("",),
-            ("one",),
-            ("one two",),
-            ("one two three",),
-            ("a b c d e f g h i j",),
-            ("répé titioñ unicode words here",),
-            ("x " * 200,),
+            None,
+            "",
+            "one",
+            "one two",
+            "one two three",
+            "a b c d e f g h i j",
+            "runs  of   spaces ",
+            " leading and trailing ",
+            "répé titioñ unicode 😀 words here",
+            "x " * 200,
         ]
-        df = spark.createDataFrame(texts, "text string")
+        df = spark.createDataFrame([(t,) for t in texts], "text string")
         for k in (2, 3, 5):
-            py = df.select(word_shingles(F.col("text"), k).alias("s")).collect()
-            sql = df.select(word_shingles("text", k).alias("s")).collect()
-            assert py == sql, f"k={k}"
-        py = df.select(*minhash_signature(F.col("text"))).collect()
-        sql = df.select(*minhash_signature("text")).collect()
-        assert py == sql
+            got = df.select("text", word_shingles("text", k).alias("s")).collect()
+            for r in got:
+                assert r["s"] == _py_shingles(r["text"], k), (k, r["text"])
+        got = df.select("text", *minhash_signature("text")).collect()
+        for r in got:
+            for j in range(4):
+                assert r[f"mh{j}"] == _py_minhash(r["text"], j), (j, r["text"])
+
+    def test_zero_vector_scores_null(self, spark):
+        """A zero embedding is legal input: it scores NULL (as in the
+        DuckDB oracle) instead of raising DIVIDE_BY_ZERO, and the other
+        candidates still rank, NULL last."""
+        from broker_spark.pipeline.ann import brute_force_topk
+
+        vecs = {
+            0: [1.0, 0.5, -0.25],
+            1: [0.5, 1.0, 0.0],
+            2: [0.0, 0.0, 0.0],
+            3: [-1.0, 0.25, 2.0],
+            4: [2.0, 1.0, -0.5],
+        }
+        df = spark.createDataFrame(
+            sorted(vecs.items()), "vec_id long, embedding array<double>"
+        )
+        got = sorted(
+            tuple(r)
+            for r in brute_force_topk(
+                df, df.filter(F.col("vec_id").isin(0, 2)), k=5
+            ).collect()
+        )
+        want = []
+        for q in (0, 2):
+            scored = sorted(
+                ((_py_cosine(vecs[q], v), c) for c, v in vecs.items() if c != q),
+                key=lambda t: (t[0] is None, -(t[0] or 0.0), t[1]),
+            )
+            for rank, (s, c) in enumerate(scored, 1):
+                want.append((q, c, rank, None if s is None else round(s, 6)))
+        assert got == sorted(want)
+        assert (0, 2, 4, None) in got
+
+    @pytest.mark.parametrize("vec_col", ["my vec", "vec-1"])
+    def test_rp_lsh_quotes_vec_col(self, spark, vec_col):
+        """rp_lsh_topk takes a column NAME: one needing quotes in SQL must
+        give the same top-k as a plain one."""
+        from broker_spark.pipeline.ann import rp_lsh_topk
+
+        planes = [[[1.0, -1.0, 1.0], [-1.0, 1.0, 1.0]]]
+        rows = [(i, [0.3 * i - 1.0, -0.5 * i + 0.2, 1.0]) for i in range(12)]
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        odd = df.withColumnRenamed("embedding", vec_col)
+
+        def topk(frame, col):
+            q = frame.filter(F.col("vec_id") < 3)
+            return sorted(
+                tuple(r) for r in rp_lsh_topk(frame, q, planes, k=3, vec_col=col).collect()
+            )
+
+        assert topk(odd, vec_col) == topk(df, "embedding")
 
     def test_rp_lsh_bucket_matches_python_tree(self, spark):
         """The expr-built sign-LSH bucket must equal the Python HOF tree
@@ -253,19 +361,27 @@ class TestTextExprEquivalence:
         from broker_spark.pipeline.text import (
             LANG_PRIORITY,
             STOPWORDS,
-            _stopword_hits,
             _stopword_hits_sql,
-            words_col,
         )
 
-        docs = self._docs(spark)
-        words = words_col(F.col("text"))
+        docs = self._docs(spark).union(
+            spark.createDataFrame(
+                [(8, None, "s5"), (9, "the  the of  ", "s5")],
+                "doc_id long, text string, source string",
+            )
+        )
         for lang in LANG_PRIORITY:
-            ref = docs.select(_stopword_hits(words, lang).alias("s")).collect()
             got = docs.select(
-                F.expr(_stopword_hits_sql("split(text, ' ')", lang)).alias("s")
+                "text",
+                F.expr(_stopword_hits_sql("split(text, ' ')", lang)).alias("s"),
             ).collect()
-            assert ref == got, lang
+            for r in got:
+                want = (
+                    None
+                    if r["text"] is None
+                    else sum(w in STOPWORDS[lang] for w in r["text"].split(" "))
+                )
+                assert r["s"] == want, (lang, r["text"])
 
     def test_repetition_bigram_and_passages(self, spark):
         from broker_spark.pipeline.text import (

@@ -227,19 +227,18 @@ def test_incremental_components_equals_full_cc(spark):
     import random
 
     from broker_spark.pipeline import dedup
+    from tests.conftest import random_graph_with_chains, union_find_components
 
     rng = random.Random(7)
     n = 60
-    edges = sorted({tuple(sorted(rng.sample(range(n), 2))) for _ in range(50)})
+    edges = random_graph_with_chains(rng, n, 40, 15)
     docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     old = pairs.filter((F.col("doc_a") + F.col("doc_b")) % 2 == 0)
     new = pairs.filter((F.col("doc_a") + F.col("doc_b")) % 2 != 0)
     inc = {r["doc_id"]: r["component"] for r in
            dedup.incremental_components(docs, old, new).collect()}
-    full = {r["doc_id"]: r["component"] for r in
-            dedup.connected_components(docs, pairs).collect()}
-    assert inc == full
+    assert inc == union_find_components(range(n), edges)
 
 
 def test_incremental_components_bridging_two_base_clusters(spark):

@@ -119,7 +119,7 @@ def test_shuffled_lsh_state_store_matches_batch_banding(
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
     # batch-side banding predicts the buckets
-    sig = df.select("doc_id", *minhash_signature(F.col("text"), 4))
+    sig = df.select("doc_id", *minhash_signature("text", 4))
     banded = [
         (r["doc_id"], r["band_id"], r["band_key"])
         for r in _banded(sig, 4, 2).collect()

@@ -362,7 +362,6 @@ class TestGuardConstantSync:
 
         pred = f"z.n <= {DEFAULT_MAX_BUCKET_SIZE}"
         for name in (
-            "dedup_components",
             "dedup_components_star",
             "dedup_cluster_keepers",
             "dedup_components_incremental",

@@ -100,7 +100,7 @@ def test_horizon_state_store_matches_session_model(
     )
 
     # batch-side banding + the documented session fold predict the output
-    sig = df.select("doc_id", *minhash_signature(F.col("text"), 4))
+    sig = df.select("doc_id", *minhash_signature("text", 4))
     ms_by_doc = {d: ms for d, _, ms in rows}
     banded = [
         (r["doc_id"], ms_by_doc[r["doc_id"]], r["band_id"], r["band_key"])
@@ -176,7 +176,7 @@ def test_guard_default_is_subset_of_census_and_hub_free(spark, data):
     }
     assert guarded <= census
     # cross-check the difference against the buckets themselves
-    sig = df.select("doc_id", *minhash_signature(F.col("text"), 4))
+    sig = df.select("doc_id", *minhash_signature("text", 4))
     buckets: dict = {}
     for r in _banded(sig, 4, 2).collect():
         if r["band_key"]:
