@@ -149,10 +149,36 @@ class TestConnectedComponents:
 
 class TestConnectedComponentsProperty:
     def test_matches_union_find_on_random_graphs(self, spark):
-        """Star CC == plain union-find on random graphs with deep chains
-        (where the O(log n) contraction needs several rounds), on both
-        execution paths: the local union-find and, with
-        local_threshold=0, the distributed star rounds."""
+        """CC labels == exact connected components (min node id per
+        component), checked against a plain union-find on random graphs
+        that include a chain deeper than one contraction round."""
+        import random
+
+        from broker_spark.pipeline.dedup import connected_components_star
+        from tests.conftest import random_graph_with_chains, union_find_components
+
+        rng = random.Random(7)
+        for trial in range(2):
+            n = 24
+            edges = random_graph_with_chains(rng, n, rng.randint(5, 18), 3)
+            expected = union_find_components(range(n), edges)
+            docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+            pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+            got = {
+                r["doc_id"]: r["component"]
+                for r in connected_components_star(docs, pairs).collect()
+            }
+            assert got == expected, f"trial {trial}: {got} != {expected}"
+
+
+class TestStarContractionProperty:
+    def test_star_equals_propagation_on_random_graphs(self, spark):
+        """Large-star/small-star contraction reaches the labels min-label
+        propagation converges to (min node id per component, computed by
+        union-find) on random graphs with deep chains, where the O(log n)
+        contraction needs several rounds — on both execution paths: the
+        local union-find and, with local_threshold=0, the distributed
+        star rounds."""
         import random
 
         from broker_spark.pipeline.dedup import connected_components_star
