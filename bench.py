@@ -347,14 +347,6 @@ NOT_BENCHED_SIBLING_REASONS = {
     "lsh_precision_recall": "precision/recall census over benched dedup_minhash_pairs_guarded candidates",
     "lsh_s_curve": "analytic S-curve table for the banding parameters (constant-size, no data scan)",
     "moving_avg_daily": "window sibling of benched ewma_hourly (same rollup scan)",
-    "multimodal_audio_chunks": "multimodal plumbing certificate (batch shape, pytest-pinned, not a query plan)",
-    "multimodal_bmp_roundtrip": "codec roundtrip certificate, pytest-pinned, not a query plan",
-    "multimodal_features": "feature-extract plumbing certificate over the same binary scan as the roundtrips",
-    "multimodal_frame_plan": "frame-sampling plan certificate, constant-size metadata, not a query plan",
-    "multimodal_image_resize": "resize plumbing certificate, pytest-pinned, not a query plan",
-    "multimodal_metadata_stats": "typed-metadata rollup over the same multimodal scan as the roundtrips",
-    "multimodal_png_roundtrip": "codec roundtrip certificate, pytest-pinned, not a query plan",
-    "multimodal_wav_roundtrip": "codec roundtrip certificate, pytest-pinned, not a query plan",
     "pii_redaction": "regex-projection sibling of the benched text_quality scan",
     "q11_important_parts": "TPC-H sibling: group-by + HAVING-subquery shape covered by benched q16/q13 joins",
     "q12_priority_lines": "TPC-H sibling: lineitem-orders join shape covered by benched q3/q10",

@@ -21,12 +21,12 @@ metrics rollups.  This package re-expresses those capabilities Spark-first:
 - metrics         -> broker_spark.jobs.stream_metrics (sec->min->hour->day
                      publish-back cascade, /volume counters)
 - LLM-pipeline ops-> broker_spark.pipeline (dedup incl. connected components,
-                     ann incl. trained IVF + int8 quantization, text, multimodal)
+                     ann incl. trained IVF + int8 quantization, text)
 
 Everything is declarative DataFrame code so Catalyst handles pushdown,
 partition pruning, and join strategy; Python UDFs appear only where the
 semantics genuinely require them (bit-exact md5 partitioner, EWMA state,
-multimodal decode plumbing).
+Arrow-batched embedding math).
 """
 
 __version__ = "0.1.0"

@@ -17,10 +17,10 @@ from __future__ import annotations
 import argparse
 import time
 
-from broker_spark.operators import metadata, retention
+from broker_spark.operators import retention
 from broker_spark.schema import DEFAULT_BUCKET_MS
 from broker_spark.session import get_spark
-from broker_spark.storage.writer import read_stream_data
+from broker_spark.storage.store import Storage
 
 
 def run(
@@ -32,9 +32,12 @@ def run(
     now_ms: int | None = None,
     dry_run: bool = False,
 ) -> list[str]:
-    """Select + drop expired partitions; returns the dropped paths."""
-    log = read_stream_data(spark, path)
-    idx = metadata.bucket_index(log, bucket_ms=bucket_ms)
+    """Select + drop expired partitions; returns the dropped paths.
+
+    The index groups by the log's physical `bucket` column, so the paths
+    it names exist whatever `bucket_ms` the log was written with, and a
+    log retention has already emptied yields no rows."""
+    idx = Storage(spark, path, bucket_ms).bucket_index()
     cfg_rows = [(s, d) for s, d in (retention_map or {}).items()] or [("", default_days)]
     cfg = spark.createDataFrame(cfg_rows, "stream_id string, storage_days int")
     now = int(time.time() * 1000) if now_ms is None else now_ms

@@ -23,9 +23,9 @@ DEFAULT_SHINGLE = 3
 
 #: Default stop-bucket cap — the densification guard is ON unless a call
 #: site explicitly opts out (VERDICT r8 #2).  The round-8 densify
-#: experiment (tools/guard_densify.py, BENCH_SCALE.md) measured why: on a
-#: mirror-heavy crawl the unguarded candidate set grows quadratically in
-#: the verbatim-duplication factor (x30 duplication: 500 -> 2.6M pairs)
+#: experiment (BENCH_SCALE.md) measured why: on a mirror-heavy crawl the
+#: unguarded candidate set grows quadratically in the
+#: verbatim-duplication factor (x30 duplication: 500 -> 2.6M pairs)
 #: while capped buckets track corpus growth.  8 keeps per-bucket pair
 #: expansion at <= C(8,2) = 28, and organic near-dup buckets are tiny by
 #: construction (every fixture SF maxes at 8).  Pass None for the exact
@@ -162,8 +162,8 @@ def minhash_lsh_pairs(
     docs, boilerplate) would otherwise go quadratic; DEFAULT-ON at
     DEFAULT_MAX_BUCKET_SIZE (VERDICT r8 #2).  `None` opts out for the
     exact census — quadratic under verbatim duplication, measured in
-    tools/guard_densify.py.  Returns distinct (doc_a, doc_b), doc_a <
-    doc_b.
+    BENCH_SCALE.md's round-8 densification experiment.  Returns distinct
+    (doc_a, doc_b), doc_a < doc_b.
 
     `sig` lets a caller that ALSO reads the signatures (the estimator
     certificate) pass a pinned signature frame so the signature scan —
@@ -1361,9 +1361,10 @@ def prefix_filter_jaccard_pairs(
     VERBATIM duplication (mirror dumps, re-crawls) every clone lands in
     the SAME prefix postings and the join goes quadratic in the clone
     factor — the identical failure mode `minhash_lsh_pairs`'s
-    `max_bucket_size` guards, measured in tools/guard_densify.py.  A
-    clone family wider than the cap then yields no near-dup candidates
-    at all, which is the documented division of labor: verbatim
+    `max_bucket_size` guards, measured in BENCH_SCALE.md's round-11
+    densification section.  A clone family wider than the cap then yields
+    no near-dup candidates at all, which is the documented division of
+    labor: verbatim
     duplication belongs to `exact_dedup_groups` (one hash-groupBy), not
     to a similarity join."""
     # One count() job supplies BOTH data-driven decisions below (the
@@ -1533,7 +1534,7 @@ def prefix_filter_jaccard_pairs_between(
     batch-side clone factor, so `max_new_posting_size` optionally
     applies the same stop-bucket cut to the BATCH prefix index,
     restoring the self-join's two-sided bound (measured in
-    tools/guard_densify.py --between).  Returns (new_doc_id,
+    BENCH_SCALE.md's round-12 cross-side clone storm).  Returns (new_doc_id,
     corpus_doc_id, common, jaccard) with jaccard >= threshold, exact.
     """
     n_new = new_docs.count()

@@ -40,36 +40,3 @@ def events_as_stream(events: DataFrame) -> DataFrame:
         F.col("props").alias("content"),
     )
 
-
-#: Deterministic media-table derivation from `documents` (the container has
-#: no real media fixtures): kind cycles by doc_id, payload is the utf-8
-#: text, durations/dimensions are doc_id-derived — mirrored in SQL below.
-MEDIA_SQL = (
-    "SELECT doc_id AS media_id, "
-    "CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' "
-    "ELSE 'video' END AS kind, "
-    "encode(text) AS payload, "
-    "CAST(CASE WHEN doc_id % 3 = 0 THEN length(text) % 640 + 1 END AS INT) AS width, "
-    "CAST(CASE WHEN doc_id % 3 <> 0 THEN (doc_id % 10 + 1) * 2500 END AS BIGINT)"
-    " AS duration_ms "
-    "FROM documents"
-)
-
-
-def docs_as_media(docs: DataFrame) -> DataFrame:
-    kind = (
-        F.when(F.col("doc_id") % 3 == 0, "image")
-        .when(F.col("doc_id") % 3 == 1, "audio")
-        .otherwise("video")
-    )
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        kind.alias("kind"),
-        F.encode(F.col("text"), "utf-8").alias("payload"),
-        F.when(F.col("doc_id") % 3 == 0, F.length("text") % 640 + 1)
-        .cast("int")
-        .alias("width"),
-        F.when(F.col("doc_id") % 3 != 0, (F.col("doc_id") % 10 + 1) * 2500)
-        .cast("long")
-        .alias("duration_ms"),
-    )

@@ -27,11 +27,9 @@ from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
 from broker_spark.operators import resend, rollup
-from broker_spark.pipeline import ann, dedup, linkage, multimodal, text
+from broker_spark.pipeline import ann, dedup, linkage, text
 from broker_spark.plans.adapters import (
     EVENTS_AS_STREAM_SQL,
-    MEDIA_SQL,
-    docs_as_media,
     events_as_stream,
 )
 from broker_spark.streaming.stateful import DEFAULT_DEDUP_HORIZON_MS
@@ -1870,34 +1868,6 @@ def q_ann_grid_buckets(spark, sf_dir):
 
 
 @register(
-    "multimodal_features",
-    """
-    SELECT doc_id AS media_id, 'image' AS kind,
-           CAST(strlen(text) AS BIGINT) AS payload_bytes,
-           sha256(text) AS payload_sha,
-           CAST(8 AS INT) AS feat_dim
-    FROM documents
-    """,
-)
-def q_multimodal_features(spark, sf_dir):
-    """Multimodal plumbing: binary payload column -> mapInPandas decode
-    (stubbed deterministic 'decoder'); schema/batching real."""
-    docs = load(spark, sf_dir, "documents")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.lit("application/octet-stream").alias("mime"),
-        F.encode(F.col("text"), "utf-8").alias("payload"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
-    return multimodal.extract_features(media).select(
-        "media_id", "kind", "payload_bytes", "payload_sha", "feat_dim"
-    )
-
-
-@register(
     "q6_forecast_revenue",
     f"""
     SELECT {_DEC4.format(x='l_extendedprice * l_discount')} AS revenue,
@@ -2108,91 +2078,6 @@ def q_asof_click_purchase(spark, sf_dir):
         clicks, purchases, on=["user_id"], left_ts="click_ts", right_ts="ts",
         value_cols=["purchase_value"],
     )
-
-
-@register(
-    "multimodal_metadata_stats",
-    f"""
-    WITH media AS ({MEDIA_SQL})
-    SELECT kind, CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(octet_length(payload) AS BIGINT)) AS BIGINT) AS total_payload_bytes,
-           round(AVG(width), 6) AS avg_width,
-           round(AVG(duration_ms), 6) AS avg_duration_ms
-    FROM media GROUP BY kind
-    """,
-)
-def q_multimodal_metadata_stats(spark, sf_dir):
-    """Metadata-only media aggregation (payload column pruned from the
-    scan — check ReadSchema)."""
-    media = docs_as_media(load(spark, sf_dir, "documents"))
-    out = multimodal.media_metadata_stats(media)
-    return out.select(
-        "kind",
-        "n",
-        "total_payload_bytes",
-        F.round("avg_width", 6).alias("avg_width"),
-        F.round("avg_duration_ms", 6).alias("avg_duration_ms"),
-    )
-
-
-@register(
-    "multimodal_frame_plan",
-    f"""
-    WITH media AS ({MEDIA_SQL})
-    SELECT media_id,
-           unnest([i * 1000 for i in range(0, greatest(CAST(duration_ms // 1000 AS INT), 1))])
-             AS frame_ts_ms
-    FROM media WHERE kind = 'video'
-    """,
-)
-def q_multimodal_frame_plan(spark, sf_dir):
-    """Video frame-sampling plan: one row per frame to decode."""
-    media = docs_as_media(load(spark, sf_dir, "documents"))
-    out = multimodal.frame_sample_plan(media, every_ms=1000)
-    return out.withColumn("frame_ts_ms", F.col("frame_ts_ms").cast("long"))
-
-
-@register(
-    "multimodal_audio_chunks",
-    f"""
-    WITH media AS ({MEDIA_SQL})
-    SELECT media_id, CAST(i AS INT) AS chunk_idx,
-           CAST(i * 5000 AS BIGINT) AS chunk_start_ms,
-           CAST(least((i + 1) * 5000, duration_ms) AS BIGINT) AS chunk_end_ms
-    FROM (
-      SELECT media_id, duration_ms,
-             unnest([x for x in range(0,
-               greatest(CAST(ceil(duration_ms / 5000.0) AS BIGINT), 1))]) AS i
-      FROM media WHERE kind = 'audio'
-    )
-    """,
-)
-def q_multimodal_audio_chunks(spark, sf_dir):
-    """Audio chunking plan: fixed-length segments with the tail clipped to
-    the clip duration — the Whisper-style pre-segmentation step, engine-side
-    (sequence + posexplode, no Python)."""
-    media = docs_as_media(load(spark, sf_dir, "documents"))
-    return multimodal.audio_chunk_plan(media, chunk_ms=5000)
-
-
-@register(
-    "multimodal_image_resize",
-    f"""
-    WITH media AS ({MEDIA_SQL})
-    SELECT media_id, CAST(width AS INT) AS src_width,
-           CAST(224 AS INT) AS target_w, CAST(224 AS INT) AS target_h,
-           round(224.0 / width, 6) AS scale_x,
-           CAST(octet_length(payload) AS BIGINT) AS payload_bytes
-    FROM media WHERE kind = 'image'
-    """,
-)
-def q_multimodal_image_resize(spark, sf_dir):
-    """Image-resize plumbing: Arrow-batched mapInPandas with the real
-    geometry math (scale, letterbox) and batch schema; the pixel op itself
-    is stubbed — no image libs in this container — and swaps in without
-    touching the plan."""
-    media = docs_as_media(load(spark, sf_dir, "documents"))
-    return multimodal.image_resize_batches(media, target_w=224, target_h=224)
 
 
 # ---------------------------------------------------------------------------
@@ -6978,73 +6863,6 @@ def q_streaming_funnel_replay(spark, sf_dir):
     return out
 
 
-@register(
-    "multimodal_wav_roundtrip",
-    """
-    WITH b AS (
-      SELECT doc_id,
-             [CAST(concat('0x', substring(md5(text), 2*i + 1, 2)) AS INT)
-              for i in range(0, 16)] AS bs
-      FROM documents
-    ),
-    s AS (SELECT doc_id, list_transform(bs, b -> (b - 128) * 256) AS samples
-          FROM b)
-    SELECT doc_id,
-           CAST(8000 AS INT) AS sample_rate,
-           CAST(16 AS INT) AS n_samples,
-           CAST(2 AS BIGINT) AS duration_ms,
-           round(sqrt(list_sum(list_transform(samples,
-                 s -> CAST(s AS DOUBLE) * s)) / 16), 6) AS rms,
-           CAST(list_max(list_transform(samples, s -> abs(s))) AS INT) AS peak
-    FROM s
-    """,
-)
-def q_multimodal_wav_roundtrip(spark, sf_dir):
-    """REAL audio decode certificate: md5-derived int16 samples are
-    wrapped in a genuine RIFF/WAVE container (synth_wav) and parsed back
-    by the stdlib `wave` decoder (decode_wav) inside mapInPandas; the
-    oracle recomputes rate/count/duration/RMS/peak straight from the
-    same md5-derived samples.  A decoder that misreads the header,
-    sample width, or byte order hash-mismatches immediately.  This makes
-    the PCM-WAV half of the multimodal decode path real — only
-    compressed formats (jpeg/png/mp3) remain stubbed, an environment
-    limitation (no media libs), not a design one."""
-    return multimodal.wav_roundtrip_stats(load(spark, sf_dir, "documents"))
-
-
-@register(
-    "multimodal_bmp_roundtrip",
-    """
-    WITH h AS (SELECT doc_id,
-                      md5(text) || md5(text || 'x') || md5(text || 'y') AS hx
-               FROM documents),
-    b AS (SELECT doc_id,
-                 [CAST(concat('0x', substring(hx, 2*i + 1, 2)) AS INT)
-                  for i in range(0, 48)] AS bs
-          FROM h)
-    SELECT doc_id, CAST(4 AS INT) AS width, CAST(4 AS INT) AS height,
-           CAST(16 AS INT) AS n_pixels,
-           round(list_sum([bs[3*i + 1] for i in range(0, 16)]) / 16.0, 6)
-             AS mean_b,
-           round(list_sum([bs[3*i + 2] for i in range(0, 16)]) / 16.0, 6)
-             AS mean_g,
-           round(list_sum([bs[3*i + 3] for i in range(0, 16)]) / 16.0, 6)
-             AS mean_r
-    FROM b
-    """,
-)
-def q_multimodal_bmp_roundtrip(spark, sf_dir):
-    """REAL image decode certificate: 48 md5-derived bytes become a
-    genuine 4x4 24-bit BMP (bottom-up padded rows, BITMAPINFOHEADER —
-    synth_bmp) and are parsed back by the struct-based decode_bmp
-    (header parse, row re-ordering, BGR channel means) inside
-    mapInPandas; the oracle recomputes the channel means directly from
-    the hex digests.  Together with the WAV twin this replaces the
-    round-4 'decode is stubbed' gap for every format the standard
-    library can express."""
-    return multimodal.bmp_roundtrip_stats(load(spark, sf_dir, "documents"))
-
-
 def _pagerank_sql(damping: float = 0.85, iters: int = 10) -> str:
     """Unrolled PageRank oracle over the MinHash-LSH candidate graph:
     the same banded-pair edge set as the CC entries, then `iters`
@@ -8224,42 +8042,6 @@ def q_streaming_hll_replay(spark, sf_dir):
     return out
 
 
-@register(
-    "multimodal_png_roundtrip",
-    """
-    WITH h AS (SELECT doc_id,
-                      md5(text) || md5(text || 'x') || md5(text || 'y')
-                        || md5(text || 'z') AS hx
-               FROM documents),
-    b AS (SELECT doc_id,
-                 [CAST(concat('0x', substring(hx, 2*i + 1, 2)) AS INT)
-                  for i in range(0, 60)] AS bs
-          FROM h)
-    SELECT doc_id, CAST(4 AS INT) AS width, CAST(5 AS INT) AS height,
-           CAST(20 AS INT) AS n_pixels,
-           round(list_sum([bs[3*i + 1] for i in range(0, 20)]) / 20.0, 6)
-             AS mean_r,
-           round(list_sum([bs[3*i + 2] for i in range(0, 20)]) / 20.0, 6)
-             AS mean_g,
-           round(list_sum([bs[3*i + 3] for i in range(0, 20)]) / 20.0, 6)
-             AS mean_b
-    FROM b
-    """,
-)
-def q_multimodal_png_roundtrip(spark, sf_dir):
-    """REAL compressed-image decode certificate: 60 md5-derived bytes
-    become a genuine 4x5 8-bit RGB PNG — zlib-compressed IDAT, CRC32'd
-    chunks, and one of each of the five scanline filters (None/Sub/Up/
-    Average/Paeth) across its five rows — then decode_png walks the
-    chunks, verifies CRCs, inflates, and defilters inside mapInPandas.
-    The oracle recomputes the channel means from the hex digests, so any
-    filter-undo, CRC, or inflate mistake hash-mismatches.  With WAV and
-    BMP this closes the 'compressed formats remain stubbed' caveat for
-    every container the standard library can express (PNG's DEFLATE is
-    stdlib zlib); only JPEG/MP3-class codecs stay environment-bound."""
-    return multimodal.png_roundtrip_stats(load(spark, sf_dir, "documents"))
-
-
 def _hll_total_sql() -> str:
     from broker_spark.pipeline import sketch
 
@@ -8670,7 +8452,7 @@ def q_dedup_prefix_filter_pairs_guarded(spark, sf_dir):
     most expensive plan in the repo at 100x — so this entry caps BOTH
     ends: prefix tokens hotter than `max_posting_size` never enter the
     candidate self-join (the verbatim-duplication quadratic killer,
-    guard_densify's stop-bucket recipe), and each anchor doc verifies
+    the densification guard's stop-bucket recipe), and each anchor doc verifies
     only its `max_candidates_per_doc` best candidates by the size upper
     bound least(na,nb)/greatest(na,nb) (ties by doc_b).  The oracle
     replays the ENTIRE guarded pipeline — prefix build, hot-token drop,
@@ -8768,8 +8550,8 @@ def q_dedup_prefix_filter_maintained(spark, sf_dir):
     order, not a current-df order (see build_prefix_filter_index's
     frozen-order contract).  tests/test_round12_ops.py pins maintained
     == recomputed and append-then-query == rebuilt-from-scratch;
-    tools/prefix_maintained_scale.py measures batch-proportional wall
-    under 10x/100x corpus growth with a fixed batch."""
+    BENCH_SCALE.md records its batch-proportional wall under 10x/100x
+    corpus growth with a fixed batch."""
     from broker_spark.storage.bucketed import _tag
 
     docs = load(spark, sf_dir, "documents")
@@ -12239,8 +12021,6 @@ _AUDIT_PRIORITY = [
     "ks_drift_sources",
     "layout_pruning_multidim",
     "lsh_precision_recall",
-    "multimodal_bmp_roundtrip",
-    "multimodal_wav_roundtrip",
     "pareto_frontier_docs",
     "psi_length_by_source",
     "repetition_top2gram_share",

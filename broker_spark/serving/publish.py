@@ -154,7 +154,14 @@ def parse_publish_query(stream_id: str, body: bytes, qs: dict) -> PublishRequest
 class PublishSpool:
     """Batch buffer in front of `Storage.store` with the reference's
     flush thresholds (BatchManager.ts:44-47).  Thread-safe; a background
-    timer enforces the close timeout."""
+    timer enforces the close timeout.
+
+    An acked message is never dropped: a batch stays buffered until its
+    commit succeeds.  A failed commit is counted as
+    `storage.writeFailures` and retried by the re-armed close-timeout
+    timer (the reference's batch retry, Batch.ts:100-110) through
+    `Storage.store_idempotent`, so rows a partial commit already wrote
+    are not stored twice."""
 
     storage: Storage
     partition_count: int = 1
@@ -169,6 +176,9 @@ class PublishSpool:
     _bytes: int = 0
     _lock: threading.Lock = field(default_factory=threading.Lock)
     _timer: threading.Timer | None = None
+    #: the buffered batch holds rows of a failed commit, which may have
+    #: partly landed: the next commit must not duplicate them
+    _failed: bool = False
 
     def publish(self, req: PublishRequest, now_ms: int | None = None) -> int:
         """Validate + enqueue; returns the assigned partition."""
@@ -217,13 +227,20 @@ class PublishSpool:
         with self._lock:
             self._rows.append(row)
             self._bytes += len(req.content)
-            if len(self._rows) >= self.max_records or self._bytes >= self.max_bytes:
-                self._flush_locked()
+            full = len(self._rows) >= self.max_records or self._bytes >= self.max_bytes
+            if full and not self._failed:
+                try:
+                    self._flush_locked()
+                except Exception:
+                    pass  # this message is buffered; the re-armed timer retries
             elif self._timer is None:
-                self._timer = threading.Timer(self.close_timeout_s, self.flush)
-                self._timer.daemon = True
-                self._timer.start()
+                self._arm_timer()
         return partition
+
+    def _arm_timer(self) -> None:
+        self._timer = threading.Timer(self.close_timeout_s, self.flush)
+        self._timer.daemon = True
+        self._timer.start()
 
     def flush(self) -> None:
         with self._lock:
@@ -233,20 +250,35 @@ class PublishSpool:
         """Flush and cancel the pending timer (call before teardown so no
         flush fires during interpreter shutdown)."""
         with self._lock:
-            if self._timer is not None:
-                self._timer.cancel()
-                self._timer = None
-            self._flush_locked()
+            try:
+                self._flush_locked()
+            finally:
+                if self._timer is not None:  # re-armed by a failed commit
+                    self._timer.cancel()
+                    self._timer = None
 
     def _flush_locked(self) -> None:
+        """Commit the batch.  On failure the rows stay buffered, the timer
+        is re-armed to retry, and the error propagates."""
         if self._timer is not None:
             self._timer.cancel()
             self._timer = None
         if not self._rows:
             return
-        rows, self._rows, self._bytes = self._rows, [], 0
-        df = self.storage.spark.createDataFrame(rows, ENVELOPE_DDL)
-        self.storage.store(df)
+        rows = self._rows
+        try:
+            df = self.storage.spark.createDataFrame(rows, ENVELOPE_DDL)
+            if self._failed:
+                self.storage.store_idempotent(df)
+            else:
+                self.storage.store(df)
+        except Exception:
+            self._failed = True
+            if self.metrics is not None:
+                self.metrics.record("storage.writeFailures", 1)
+            self._arm_timer()
+            raise
+        self._rows, self._bytes, self._failed = [], 0, False
         if self.metrics is not None:  # storageWrite counters (VolumeLogger)
             self.metrics.record("storage.writeMessages", len(rows))
             self.metrics.record("storage.writeBytes", sum(len(r[-1]) for r in rows))

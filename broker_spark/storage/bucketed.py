@@ -7,7 +7,7 @@ sorted) on the join key, so a SortMergeJoin needs NO Exchange on either
 side — the shuffle is paid once at write time and amortized over every
 subsequent join.  This module materializes the orders/lineitem pair
 bucketed by order key and is the backing for the `bucketed_join_*`
-catalog entries; tests/test_plan_properties assert the no-Exchange plan
+catalog entries; tests/test_round5c_ops asserts the no-Exchange plan
 shape.  Reference parity: the reference co-locates message data with its
 bucket index by (stream, partition) for the same reason
 (`/root/reference/src/storage/BucketManager.ts` placement logic).

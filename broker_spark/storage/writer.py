@@ -138,33 +138,6 @@ def plan_compaction_groups(
     )
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    path: str,
-    keys: list[str],
-    n_buckets: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a table bucketed + sorted on its join key, so repeated
-    big-to-big joins on that key are SHUFFLE-FREE: both sides arrive
-    pre-partitioned (and pre-sorted, so SortMergeJoin skips its sort too).
-
-    At 100 TB this is the difference between re-shuffling a fact table on
-    every join and paying the layout cost once at write: bucket the log /
-    fact tables on the key they're joined on (order key, stream id) and
-    every downstream join of two same-bucketed tables plans with zero
-    Exchange.  Registered via saveAsTable (bucketing metadata lives in the
-    catalog); `path` keeps the data external."""
-    (
-        df.write.mode(mode)
-        .bucketBy(n_buckets, *keys)
-        .sortBy(*keys)
-        .option("path", path)
-        .saveAsTable(name)
-    )
-
-
 def read_stream_data(
     spark: SparkSession, path: str, merge_schema: bool = False
 ) -> DataFrame:

@@ -76,6 +76,32 @@ def test_delete_expired_escapes_special_chars(spark, tmp_path):
     assert st.request_last(sid, 0, 10).count() == 0
 
 
+def test_delete_expired_reads_the_written_buckets(spark, tmp_path):
+    """The sweep drops the buckets the log was written with, whatever
+    `bucket_ms` it is run with: the paths come from the log's own `bucket`
+    column, not from one re-derived from `ts`."""
+    path = str(tmp_path / "log5")
+    st = Storage(spark, path, bucket_ms=1000)
+    st.store(spark.createDataFrame([make_msg("s", 0, 1000, 0)], ENVELOPE))
+
+    removed = delete_expired.run(spark, path, default_days=1, now_ms=3 * 86_400_000)
+    assert len(removed) == 1 and removed[0].endswith("bucket=1")
+    assert st.request_last("s", 0, 10).count() == 0
+
+
+def test_delete_expired_on_emptied_log_drops_nothing(spark, tmp_path):
+    """Once retention has dropped every bucket, the next sweep finds
+    nothing to drop instead of failing to read the empty log."""
+    path = str(tmp_path / "log6")
+    st = Storage(spark, path, bucket_ms=1000)
+    st.store(spark.createDataFrame([make_msg("s", 0, 1000, 0)], ENVELOPE))
+    kw = dict(bucket_ms=1000, default_days=1, now_ms=3 * 86_400_000)
+
+    assert len(delete_expired.run(spark, path, **kw)) == 1
+    assert st.request_last("s", 0, 10).count() == 0
+    assert delete_expired.run(spark, path, **kw) == []
+
+
 def test_gateway_500_on_storage_failure(spark, tmp_path):
     """A failing scan surfaces as the reference's 500 JSON, not a broken
     chunked response (DataQueryEndpoints.ts:86-93)."""

@@ -1,16 +1,14 @@
 """Unit tests for LLM-pipeline operators not fully covered by the oracle
-parity suite: simhash properties, exact-dedup row semantics, multimodal
-plumbing, EWMA recurrence, ANN recall sanity."""
+parity suite: simhash properties, exact-dedup row semantics, EWMA
+recurrence, ANN recall sanity."""
 
 from __future__ import annotations
-
-import hashlib
 
 import pytest
 from pyspark.sql import functions as F
 
 from broker_spark.operators import rollup
-from broker_spark.pipeline import ann, dedup, multimodal
+from broker_spark.pipeline import ann, dedup
 
 
 @pytest.fixture(scope="module")
@@ -271,34 +269,6 @@ class TestAnn:
         rows = grid.collect()
         assert len(rows) > 0
         assert all(r["query_id"] != r["cand_id"] for r in rows)
-
-
-class TestMultimodal:
-    @pytest.fixture(scope="class")
-    def media(self, spark):
-        rows = [
-            (0, "image", "image/png", b"\x89PNG-fake-bytes", 64, 64, None),
-            (1, "image", "image/png", b"other-bytes", 32, 32, None),
-            (2, "video", "video/mp4", b"\x00mp4", None, None, 3500),
-        ]
-        return spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-
-    def test_extract_features_deterministic(self, media):
-        out = {r["media_id"]: r for r in multimodal.extract_features(media).collect()}
-        assert out[0]["payload_sha"] == hashlib.sha256(b"\x89PNG-fake-bytes").hexdigest()
-        assert out[0]["feat_dim"] == 8
-        assert out[0]["payload_bytes"] == 15
-        again = {r["media_id"]: r for r in multimodal.extract_features(media).collect()}
-        assert out[0]["feat_head"] == again[0]["feat_head"]
-
-    def test_metadata_stats_column_pruned(self, media):
-        stats = {r["kind"]: r for r in multimodal.media_metadata_stats(media).collect()}
-        assert stats["image"]["n"] == 2
-        assert stats["video"]["avg_duration_ms"] == 3500.0
-
-    def test_frame_sample_plan(self, media):
-        frames = multimodal.frame_sample_plan(media, every_ms=1000).collect()
-        assert [r["frame_ts_ms"] for r in frames] == [0, 1000, 2000]
 
 
 class TestEwma:

@@ -98,36 +98,6 @@ def test_no_row_at_a_time_python(spark):
         assert "BatchEvalPython" not in plan, name
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Two tables bucketed on the join key join with ZERO Exchange — the
-    pay-layout-once-at-write lever for repeated big-to-big joins."""
-    from broker_spark.storage.writer import write_bucketed_table
-
-    li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    o = spark.read.parquet(f"{SF_SMALL}/orders.parquet").select(
-        "o_orderkey", "o_orderdate"
-    )
-    write_bucketed_table(li, "b_li", str(tmp_path / "b_li"), ["l_orderkey"], 8)
-    write_bucketed_table(o, "b_o", str(tmp_path / "b_o"), ["o_orderkey"], 8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("b_li").join(
-            spark.table("b_o"),
-            spark.table("b_li")["l_orderkey"] == spark.table("b_o")["o_orderkey"],
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # both sides arrive pre-bucketed
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_li")
-        spark.sql("DROP TABLE IF EXISTS b_o")
-
-
 def test_log_scan_prunes_partitions(spark, tmp_path):
     """A (stream_id, partition, bucket) predicate on the written log shows
     up as PartitionFilters — directories are pruned before any file opens

@@ -5,14 +5,17 @@ back out of a resend query."""
 from __future__ import annotations
 
 import json
+import time
 import urllib.error
 import urllib.request
 
 import pytest
 
+from broker_spark.jobs.stream_metrics import MetricsContext
 from broker_spark.serving import http as serving_http
 from broker_spark.serving.publish import (
     PublishError,
+    PublishRequest,
     PublishSpool,
     parse_positive_integer,
     parse_timestamp,
@@ -179,3 +182,49 @@ class TestSpoolAndRoundTrip:
         )
         assert p == 6  # golden vector (test/unit/Partitioner.test.ts)
         spool.flush()
+
+
+class _FirstCommitFails(Storage):
+    """A log whose first `store()` raises — before writing anything, or,
+    with `lands=True`, after the batch was written (a commit that landed
+    but reported failure)."""
+
+    def __init__(self, *args, lands: bool, **kwargs) -> None:
+        super().__init__(*args, **kwargs)
+        self.lands = lands
+        self.stores = 0
+
+    def store(self, df) -> None:
+        self.stores += 1
+        if self.stores == 1:
+            if self.lands:
+                super().store(df)
+            raise OSError("injected commit failure")
+        super().store(df)
+
+
+@pytest.mark.parametrize("lands", [False, True], ids=["nothing_written", "batch_written"])
+def test_failed_flush_keeps_every_acked_message(spark, tmp_path, lands):
+    """A commit that raises on the close-timeout timer thread must not drop
+    the acked batch: it is retried, and a partly landed commit is not
+    duplicated.  The failure is counted for /volume."""
+    metrics = MetricsContext()
+    st = _FirstCommitFails(spark, str(tmp_path / "log"), lands=lands)
+    spool = PublishSpool(st, close_timeout_s=0.2, metrics=metrics)
+    for i in range(6):
+        spool.publish(
+            PublishRequest("s", json.dumps({"i": i}), timestamp=1000 + i, sequence_number=i),
+            now_ms=10_000,
+        )
+
+    def counter(name):
+        return metrics.report()["metrics"].get(name, {}).get("total", 0)
+
+    deadline = time.monotonic() + 60
+    while counter("storage.writeMessages") < 6 and time.monotonic() < deadline:
+        time.sleep(0.1)
+    spool.close()
+
+    stored = [r["sequence_no"] for r in st.request_last("s", 0, 100).collect()]
+    assert sorted(stored) == list(range(6))
+    assert counter("storage.writeFailures") == 1

@@ -437,38 +437,6 @@ def test_weighted_sample_without_lang_column(spark):
 # -- real PNG decode ---------------------------------------------------------
 
 
-def test_png_roundtrip_exercises_all_five_filters():
-    from broker_spark.pipeline.multimodal import decode_png, synth_png
-
-    px = bytes(range(60))  # deterministic gradient, 4x5 RGB
-    payload = synth_png(px, 4, 5)
-    assert payload[:8] == b"\x89PNG\r\n\x1a\n"
-    # five rows -> filter bytes 0..4 all present in the filtered stream
-    import zlib
-
-    raw = zlib.decompress(payload[payload.index(b"IDAT") + 4 : -16])
-    assert {raw[r * 13] for r in range(5)} == {0, 1, 2, 3, 4}
-    stats = decode_png(payload)
-    assert (stats["width"], stats["height"], stats["n_pixels"]) == (4, 5, 20)
-    for ch, key in ((0, "mean_r"), (1, "mean_g"), (2, "mean_b")):
-        assert stats[key] == round(sum(px[i] for i in range(ch, 60, 3)) / 20, 6)
-
-
-def test_png_decode_rejects_corrupt_crc_and_foreign_bytes():
-    import struct
-
-    import pytest as _pytest
-
-    from broker_spark.pipeline.multimodal import decode_png, synth_png
-
-    payload = bytearray(synth_png(bytes(60), 4, 5))
-    payload[40] ^= 0xFF  # flip a byte inside IDAT -> CRC must catch it
-    with _pytest.raises(NotImplementedError, match="CRC"):
-        decode_png(bytes(payload))
-    with _pytest.raises(NotImplementedError, match="not a PNG"):
-        decode_png(b"GIF89a" + bytes(20))
-
-
 def test_hll_merge_of_partial_sketches_equals_direct_sketch(spark):
     """Register-max merge is lossless: the estimate from merged per-part
     sketches equals the single-pass estimate over the union."""
@@ -547,18 +515,6 @@ def test_table_diff_classifies_all_four_states(spark):
         for r in table_diff(old, new, ["id"], ["payload"]).collect()
     }
     assert got == {1: "unchanged", 2: "changed", 3: "removed", 4: "added"}
-
-
-def test_png_synth_validates_buffer_and_decode_rejects_truncation():
-    import pytest as _pytest
-
-    from broker_spark.pipeline.multimodal import decode_png, synth_png
-
-    with _pytest.raises(ValueError, match="RGB bytes"):
-        synth_png(bytes(50), 4, 5)
-    payload = synth_png(bytes(60), 4, 5)
-    with _pytest.raises(NotImplementedError, match="truncated"):
-        decode_png(payload[:30])
 
 
 def test_table_diff_null_and_separator_values_do_not_collide(spark):

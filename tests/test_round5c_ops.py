@@ -157,10 +157,12 @@ def test_bucketed_join_has_no_exchange_on_either_side(spark):
     try:
         joined = bucketed_join(spark, "/root/testdata/sf0.001")
         plan = joined._jdf.queryExecution().executedPlan().toString()
+        n_rows = joined.count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "SortMergeJoin" in plan
     assert "Exchange" not in plan
+    assert n_rows > 0
 
 
 # -- incremental rollup merge ------------------------------------------------

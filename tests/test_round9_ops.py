@@ -6,11 +6,19 @@ LSH densification guard (VERDICT r8 #2)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from broker_spark.streaming import stateful
+
+#: the archived round-8 bench detail record, wherever pytest is started from
+R8_DETAIL = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "records",
+    "BENCH_DETAIL_r08.json",
+)
 
 HOUR_MS = 3_600_000
 BASE_MS = 1_704_067_200_000  # 2024-01-01T00:00:00Z
@@ -288,7 +296,7 @@ class TestRegressionFlagger:
 
         import bench
 
-        with open("BENCH_DETAIL_r08.json") as fh:
+        with open(R8_DETAIL) as fh:
             prev = json.load(fh)
         flags = bench.flag_regressions(
             prev["queries"], prev["queries"], prev.get("spreads") or {}, 1.5
@@ -306,7 +314,7 @@ class TestRegressionFlagger:
 
         import bench
 
-        with open("BENCH_DETAIL_r08.json") as fh:
+        with open(R8_DETAIL) as fh:
             prev = json.load(fh)
         noisy = {
             k: v * 1.7 for k, v in prev["queries"].items() if v is not None

@@ -33,9 +33,12 @@ builder therefore makes each copy self-similar but cross-copy disjoint:
 
 Usage:
     python tools/bench_scale.py [--copies 10] [--runs 2] [--rebuild]
+                                [--entries NAME ...]
 
-Writes BENCH_SCALE.md at the repo root. The scaled parquet lives under
-.scale/ (gitignored); this tool is NOT part of the driver bench contract.
+`--entries` times the named catalog entries instead of the HEAVY set.
+Prints a markdown table to stdout; BENCH_SCALE.md is the hand-kept record
+the table is appended to. The scaled parquet lives under .scale/
+(gitignored); this tool is NOT part of the driver bench contract.
 """
 
 from __future__ import annotations
@@ -268,15 +271,13 @@ def time_set(
     spark: SparkSession,
     sf_dir: str,
     runs: int,
-    copies: int = 1,
-    entries: list[str] | None = None,
+    copies: int,
+    entries: list[str],
 ) -> dict[str, float]:
-    """Best-of-`runs` wall time per entry.  `entries` defaults to the
-    HEAVY set; per-round scale scripts (tools/scale_r6.py) pass their
-    own list instead of duplicating this loop."""
+    """Best-of-`runs` wall time per entry."""
     overrides = _scaled_ann_overrides(copies)
     out: dict[str, float] = {}
-    for name in entries if entries is not None else HEAVY:
+    for name in entries:
         fn = overrides.get(name, CATALOG[name].fn)
         best = None
         for _ in range(runs):
@@ -294,6 +295,7 @@ def main() -> None:
     ap.add_argument("--copies", type=int, default=10)
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--rebuild", action="store_true")
+    ap.add_argument("--entries", nargs="+", default=HEAVY)
     args = ap.parse_args()
 
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -307,31 +309,19 @@ def main() -> None:
         build(spark, src, dst, args.copies)
 
     spark.range(1).count()
-    base = time_set(spark, src, args.runs, copies=1)
-    scaled = time_set(spark, dst, args.runs, copies=args.copies)
+    base = time_set(spark, src, args.runs, 1, args.entries)
+    scaled = time_set(spark, dst, args.runs, args.copies, args.entries)
 
-    lines = [
-        "# BENCH_SCALE — 10x scale slope",
-        "",
-        f"Built by `tools/bench_scale.py --copies {args.copies}` "
-        f"(cross-copy-disjoint replication of sf0.1; see the module docstring "
-        f"for why naive cloning would corrupt the dedup workloads).  ANN "
-        f"entries run with nlist scaled to the corpus (constant inverted-list "
-        f"length, the production sizing rule); trained quantizers are "
-        f"memoized, so best-of-N reflects warm query cost, as in a real "
-        f"index-build/query split.",
-        f"Runner: local[{spark.sparkContext.defaultParallelism}], best-of-{args.runs}.",
-        "",
-        f"Data growth: {args.copies}x rows. A linear operator should stay well "
-        f"below {args.copies}x wall time (per-job fixed overhead amortizes); "
-        f"ratio > {round(1.5 * args.copies, 1)}x (1.5x the data growth) = "
-        "super-linear, flagged.",
-        "",
-        f"| query | t(sf0.1) s | t({args.copies}x) s | ratio | verdict |",
-        "|---|---|---|---|---|",
-    ]
+    print(
+        f"Runner: local[{spark.sparkContext.defaultParallelism}], "
+        f"best-of-{args.runs}; ratio > {round(1.5 * args.copies, 1)}x "
+        "(1.5x the data growth) = super-linear, flagged."
+    )
+    print()
+    print(f"| query | t(sf0.1) s | t({args.copies}x) s | ratio | verdict |")
+    print("|---|---|---|---|---|")
     flags = []
-    for name in HEAVY:
+    for name in args.entries:
         r = scaled[name] / base[name] if base[name] else float("inf")
         verdict = (
             "SUPER-LINEAR — inspect"
@@ -340,19 +330,11 @@ def main() -> None:
         )
         if r > 1.5 * args.copies:
             flags.append(name)
-        lines.append(
-            f"| {name} | {base[name]} | {scaled[name]} | {r:.1f}x | {verdict} |"
-        )
-    lines += [
-        "",
-        f"Flagged super-linear: {flags if flags else 'none'}.",
-        "",
-        "Raw: " + json.dumps({"base": base, "scaled": scaled, "copies": args.copies}),
-        "",
-    ]
-    with open(os.path.join(REPO, "BENCH_SCALE.md"), "w") as fh:
-        fh.write("\n".join(lines))
-    print("\n".join(lines))
+        print(f"| {name} | {base[name]} | {scaled[name]} | {r:.1f}x | {verdict} |")
+    print()
+    print(f"Flagged super-linear: {flags if flags else 'none'}.")
+    print()
+    print("Raw: " + json.dumps({"base": base, "scaled": scaled, "copies": args.copies}))
 
 
 if __name__ == "__main__":

@@ -42,7 +42,7 @@ AUDITED = [
     "curated_mix_manifest",        # composed pipeline, pinned stats frame
     "semantic_dedup_clusters",     # grid cells + applyInPandas + CC
     "dedup_graph_pagerank",        # iterative: 10 joined+agg rounds
-    "multimodal_wav_roundtrip",    # mapInPandas real-decode path
+    "embedding_pca_power_iter",    # mapInPandas Gram pass + power iteration
     # round-5 session 2
     "table_profile_documents",     # multi-distinct Expand, one scan
     "compaction_plan",             # metadata window over (keys, bucket)
@@ -51,7 +51,6 @@ AUDITED = [
     "dedup_graph_triangles",       # degree-oriented wedge closure
     "event_pmi_pairs",             # context equi-join + broadcast marginals
     "ks_drift_sources",            # per-value collapse + compact ECDF window
-    "multimodal_png_roundtrip",    # mapInPandas real PNG inflate/defilter
     "hll_monthly_merge",           # sketch rollup: daily register merge
     # round-5 session 3
     "dedup_prefix_filter_pairs",   # prefix-filtered similarity self-join
