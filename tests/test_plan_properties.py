@@ -98,6 +98,32 @@ def test_no_row_at_a_time_python(spark):
         assert "BatchEvalPython" not in plan, name
 
 
+def test_bucketed_join_is_shuffle_free(spark):
+    """Two tables bucketed on the join key join with ZERO Exchange — the
+    pay-layout-once-at-write lever for repeated big-to-big joins — and
+    the co-located join returns the same rows as the plain one."""
+    from broker_spark.storage.bucketed import bucketed_order_tables
+
+    o_name, l_name = bucketed_order_tables(spark, SF_SMALL)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        li, o = spark.table(l_name), spark.table(o_name)
+        joined = li.join(o, li["l_orderkey"] == o["o_orderkey"])
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        n_bucketed = joined.count()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert "SortMergeJoin" in plan
+    assert "Exchange" not in plan  # both sides arrive pre-bucketed
+    plain_li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet")
+    plain_o = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
+    n_plain = plain_li.join(
+        plain_o, plain_li["l_orderkey"] == plain_o["o_orderkey"]
+    ).count()
+    assert n_bucketed == n_plain > 0
+
+
 def test_log_scan_prunes_partitions(spark, tmp_path):
     """A (stream_id, partition, bucket) predicate on the written log shows
     up as PartitionFilters — directories are pruned before any file opens
