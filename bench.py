@@ -328,18 +328,12 @@ NOT_BENCHED_SIBLING_REASONS = {
     "dedup_components_star": "star-CC form superseded by benched dedup_components_incremental",
     "dedup_containment": "containment variant of benched dedup_ngram_jaccard_guarded (same shingle explode)",
     "dedup_edit_distance_pairs": "edit-distance verify stage over the candidates benched as dedup_prefix_filter_pairs",
-    "dedup_exact_kept": "kept-rows projection of benched dedup_exact_groups",
     "dedup_graph_pagerank": "pagerank over the same pair graph benched as dedup_graph_degrees",
     "dedup_incremental_pairs": "new-vs-corpus form of benched dedup_minhash_pairs_guarded",
     "dedup_prefix_filter_incremental": "new-vs-corpus form of benched dedup_prefix_filter_pairs (same prefix pipeline, split input)",
-    "dedup_minhash_signatures": "signature-stage component of benched dedup_minhash_pairs_guarded",
     "dedup_pagerank_keepers": "keeper selection over dedup_graph_pagerank's scores (same graph)",
-    "dedup_simhash": "signature-stage component of benched dedup_simhash_pairs",
     "distinct_stream_partitions": "DISTINCT projection of the scan benched as metadata_counts",
-    "doc_fingerprint": "fingerprint-stage component of benched passage_dedup_stats",
     "doc_winnow_fingerprints": "winnowing variant of doc_fingerprint (same rolling-hash scan)",
-    "embedding_pca_scores": "projection stage of benched embedding_pca_power_iter",
-    "embedding_quantize_int8": "quantize stage of benched int8_quant_error_stats",
     "events_lag_deltas": "lag-window sibling of benched events_gap_fill (same events scan)",
     "events_pivot_daily": "pivot form of benched events_hourly_rollup",
     "grouping_sets_order_stats": "GROUPING SETS form of benched rollup_order_stats",
@@ -348,31 +342,15 @@ NOT_BENCHED_SIBLING_REASONS = {
     "lsh_s_curve": "analytic S-curve table for the banding parameters (constant-size, no data scan)",
     "moving_avg_daily": "window sibling of benched ewma_hourly (same rollup scan)",
     "pii_redaction": "regex-projection sibling of the benched text_quality scan",
-    "q11_important_parts": "TPC-H sibling: group-by + HAVING-subquery shape covered by benched q16/q13 joins",
-    "q12_priority_lines": "TPC-H sibling: lineitem-orders join shape covered by benched q3/q10",
-    "q14_promo_revenue": "TPC-H sibling: part-lineitem join shape covered by benched q17",
-    "q15_top_supplier": "TPC-H sibling: max-over-aggregate shape covered by benched q18/q21 family",
-    "q16_supplier_part_count": "TPC-H sibling: anti-join + distinct-count shape covered by benched q13/q21",
-    "q19_disjunctive_revenue": "TPC-H sibling: disjunctive-predicate scan covered by benched q6/q17",
-    "q20_part_promotion": "TPC-H sibling: nested-semi-join shape covered by benched q21_sole_returner",
-    "q22_idle_customers": "TPC-H sibling: anti-join + scalar-subquery shape covered by benched q13/q18",
-    "q2_min_cost_supplier": "TPC-H sibling: correlated-min join shape covered by benched q15-family joins",
-    "q4_order_priority": "TPC-H sibling: EXISTS semi-join shape covered by benched q21_sole_returner",
-    "quality_topk_per_lang": "top-k projection of benched quality_percentile_filter (same quality scan)",
     "range_join_clicks_before_purchase": "range-join sibling of benched asof_click_purchase",
     "resend_from_publisher": "composite-lower-bound sibling of benched resend_range_publisher",
     "resend_union_merge": "k-way sorted-merge sibling of the benched resend family (same pruned scan)",
     "rollup_daily_cascade": "cascade of benched events_hourly_rollup levels (re-aggregates its output)",
     "salted_stream_totals": "salted-aggregation demonstration twin of benched metadata_counts",
     "source_dedup_stats": "per-source rollup of benched cross_source_dup_groups",
-    "stopword_stats": "ratio component of benched text_quality",
     "stratified_sample_per_lang": "stratified sibling of benched weighted_sample_docs",
-    "term_document_frequency": "document-frequency stage of benched bm25_topk",
-    "tfidf_top_terms": "top-terms projection of benched tfidf_cosine_pairs_guarded",
     "train_val_test_split": "hash-split sibling of benched training_manifest",
-    "training_mix_weights": "weights stage of benched temperature_mix_allocation",
     "unigram_logprob_score": "unigram sibling of benched bigram_logprob_score (same token explode)",
-    "value_percentiles": "percentile sibling of benched events_value_percentiles_exact",
     "wordpiece_encode_counts": "encode stage of benched wordpiece_fertility_by_lang",
 }
 

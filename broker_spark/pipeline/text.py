@@ -95,47 +95,6 @@ def token_stats(docs: DataFrame, group_col: str = "lang") -> DataFrame:
     )
 
 
-def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Per-document top-k terms by smoothed TF-IDF
-    (idf = ln((N+1)/(df+1)) + 1), ties broken by term ascending.
-
-    Shape: one explode + two hash-aggs (tf on (doc, term), df on term) and
-    one broadcast of the single-row corpus count; the per-doc rank is a
-    window partitioned by doc_id — no global sort.  At corpus scale the
-    df table is the only medium-size side and joins on the term key."""
-    terms = docs.select(
-        "doc_id", F.explode(words_col(F.col("text"))).alias("term")
-    )
-    tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    df_ = (
-        terms.distinct().groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    )
-    n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    scored = (
-        tf.join(df_, "term")
-        .crossJoin(broadcast(n_docs))
-        .withColumn(
-            "tfidf",
-            F.round(
-                F.col("tf")
-                * (
-                    F.log((F.col("n_docs") + 1).cast("double") / (F.col("df") + 1))
-                    + F.lit(1.0)
-                ),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("tfidf").desc(), F.col("term").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("doc_id", "term", "tf", "df", "tfidf", "rank")
-    )
-
-
 def hash_sample(docs: DataFrame, threshold: int = 6554, id_col: str = "doc_id") -> DataFrame:
     """Deterministic corpus sampling: keep rows whose md5(id) prefix (first
     4 hex chars as an int in [0, 65536)) falls under `threshold` — 6554 is
@@ -210,23 +169,6 @@ def stratified_sample(
     )
 
 
-def term_document_frequency(docs: DataFrame, k: int = 20) -> DataFrame:
-    """Corpus vocabulary head: the k terms appearing in the most documents
-    (df desc, term asc) — the stop-word / boilerplate-detection input.
-    Distinct (doc, term) then one term-key agg; top-k via a single-partition
-    window over the tiny aggregated frame."""
-    terms = docs.select(
-        "doc_id", F.explode(F.array_distinct(words_col(F.col("text")))).alias("term")
-    )
-    df_ = terms.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.orderBy(F.col("df").desc(), F.col("term").asc())
-    return (
-        df_.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("term", "df", "rank")
-    )
-
-
 def unigram_logprob_score(docs: DataFrame) -> DataFrame:
     """Per-document mean negative log-probability under an add-one-smoothed
     unigram model trained on the corpus itself — the cheap stand-in for
@@ -259,23 +201,6 @@ def unigram_logprob_score(docs: DataFrame) -> DataFrame:
     return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.round(F.avg("nll"), 6).alias("mean_nll"),
-    )
-
-
-def quality_topk_per_group(
-    docs: DataFrame, k: int = 5, group_col: str = "lang"
-) -> DataFrame:
-    """Per-group quality selection: top-k documents by quality score (ties
-    by doc_id) in each group — the 'keep the best N per language' step of
-    a training-mix recipe.  Window over the group key, one shuffle."""
-    feats = quality_features(docs, carry=(F.col(group_col),))
-    w = Window.partitionBy(group_col).orderBy(
-        F.col("quality_score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        feats.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("doc_id", group_col, "quality_score", "rank")
     )
 
 
@@ -492,38 +417,6 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def training_mix_weights(docs: DataFrame, group_col: str = "source") -> DataFrame:
-    """Data-mixture design table: per-source document/token counts, the
-    source's natural share of corpus tokens, and the sampling weight that
-    would re-balance the mix to uniform across sources
-    (weight = target_share / natural_share — weight > 1 means upsample,
-    i.e. repeat the source's documents across epochs).
-
-    One hash-agg shuffle on the group key; the corpus totals are a
-    single-row broadcast.  All shares/weights derive from exact integer
-    token sums, so the ratios are bit-identical across engines."""
-    stats = docs.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(token_count(F.col("text")).cast("long")).alias("total_tokens"),
-    )
-    totals = stats.agg(
-        F.sum("total_tokens").alias("corpus_tokens"),
-        F.count(F.lit(1)).alias("n_sources"),
-    )
-    natural = F.col("total_tokens").cast("double") / F.col("corpus_tokens").cast("double")
-    target = F.lit(1.0) / F.col("n_sources").cast("double")
-    return (
-        stats.crossJoin(broadcast(totals))
-        .select(
-            group_col,
-            "n_docs",
-            "total_tokens",
-            F.round(natural, 6).alias("natural_share"),
-            F.round(target / natural, 6).alias("mix_weight"),
-        )
-    )
-
-
 #: md5-bucket thresholds out of 65536: 90% train / 5% val / 5% test.
 SPLIT_TRAIN_MAX = 58982
 SPLIT_VAL_MAX = 62259
@@ -634,19 +527,6 @@ def winnow_fingerprints(
         "doc_id",
         F.array_sort(F.array_distinct(minima)).alias("fingerprints"),
         F.size(F.array_distinct(minima)).alias("n_fingerprints"),
-    )
-
-
-def fingerprint(docs: DataFrame) -> DataFrame:
-    """Bag-of-words document fingerprint: md5 over the sorted distinct word
-    set — a cheap canonical-content hash (same words, any order -> same
-    print).  Winnowing/rolling-hash variants layer on the same shape."""
-    words = words_col(F.col("text"))
-    canon = F.array_join(F.array_sort(F.array_distinct(words)), " ")
-    return docs.select(
-        "doc_id",
-        F.md5(canon).alias("fingerprint"),
-        F.size(F.array_distinct(words)).alias("n_distinct_words"),
     )
 
 
@@ -1265,8 +1145,8 @@ def temperature_mix_allocation(
     """Temperature-based mixture allocation: p_temp(s) ∝ p_nat(s)^alpha
     (alpha=0.3, the mT5 low-resource upsampling rule), plus the repeat
     factor p_temp/p_nat each source needs to hit its target share.
-    Complements `training_mix_weights` (uniform target): temperature
-    interpolates between natural (alpha=1) and uniform (alpha=0).
+    Temperature interpolates between the natural mix (alpha=1) and a
+    uniform one across sources (alpha=0).
 
     Scale shape: one hash-agg to per-source stats (a handful of rows),
     two broadcast scalar attaches — nothing here grows with the corpus."""

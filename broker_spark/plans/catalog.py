@@ -511,34 +511,6 @@ def q_customers_without_pending_orders(spark, sf_dir):
 
 
 @register(
-    "q4_order_priority",
-    """
-    SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
-    FROM orders
-    WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o_orderdate <  TIMESTAMP '1996-04-01 00:00:00'
-      AND EXISTS (SELECT 1 FROM lineitem
-                  WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-    GROUP BY o_orderpriority
-    """,
-)
-def q_q4_order_priority(spark, sf_dir):
-    """TPC-H Q4 shape (fixture has no commit/receipt dates, so the EXISTS
-    predicate is 'has a returned line'): EXISTS decorrelates to a
-    left-semi join; the date filter prunes orders before the join."""
-    o = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
-    )
-    li = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
-
-
-@register(
     "q10_returned_items",
     f"""
     SELECT c_custkey, c_name, n_name,
@@ -762,28 +734,6 @@ def q_moving_avg_daily(spark, sf_dir):
 
 
 @register(
-    "value_percentiles",
-    """
-    SELECT event_type,
-           round(quantile_cont(value, 0.5), 6) AS p50,
-           round(quantile_cont(value, 0.9), 6) AS p90,
-           round(quantile_cont(value, 0.99), 6) AS p99
-    FROM events GROUP BY event_type
-    """,
-)
-def q_value_percentiles(spark, sf_dir):
-    """Exact interpolated percentiles (Spark `percentile` == DuckDB
-    `quantile_cont`).  At 100 TB swap for approx_percentile — the exact
-    form needs the full value multiset per group."""
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
-        F.round(F.expr("percentile(value, 0.9)"), 6).alias("p90"),
-        F.round(F.expr("percentile(value, 0.99)"), 6).alias("p99"),
-    )
-
-
-@register(
     "cube_order_stats",
     f"""
     SELECT o_orderstatus, o_orderpriority,
@@ -821,39 +771,6 @@ def q_events_pivot_daily(spark, sf_dir):
         .pivot("event_type", ["click", "view", "purchase"])
         .count()
         .na.fill(0, ["click", "view", "purchase"])
-    )
-
-
-def _stopword_sql() -> str:
-    from broker_spark.pipeline.text import STOPWORDS
-
-    all_words = sorted({w for ws in STOPWORDS.values() for w in ws})
-    lst = ", ".join(f"'{w}'" for w in all_words)
-    return f"""
-    WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents)
-    SELECT doc_id,
-           CAST(len(words) AS INT) AS n_tokens,
-           CAST(len([x for x in words if x in ({lst})]) AS INT) AS n_stopwords,
-           round(len([x for x in words if x in ({lst})]) * 1.0 / len(words), 6)
-             AS stopword_ratio
-    FROM w
-    """
-
-
-@register("stopword_stats", _stopword_sql())
-def q_stopword_stats(spark, sf_dir):
-    """Stopword-ratio quality signal (high ratio ~ natural prose, low ~
-    boilerplate/code) over the union of all language stopword lists."""
-    docs = load(spark, sf_dir, "documents")
-    all_words = sorted({w for ws in text.STOPWORDS.values() for w in ws})
-    vocab = F.array(*[F.lit(w) for w in all_words])
-    words = F.split(F.col("text"), " ")
-    n_stop = F.size(F.filter(words, lambda w: F.array_contains(vocab, w)))
-    return docs.select(
-        "doc_id",
-        F.size(words).alias("n_tokens"),
-        n_stop.alias("n_stopwords"),
-        F.round(n_stop.cast("double") / F.size(words), 6).alias("stopword_ratio"),
     )
 
 
@@ -910,37 +827,6 @@ _MINHASH_SIG_SQL = """
       list_aggregate(list_transform(shingles, s -> substring(md5(s), 17, 8)), 'min') AS mh2,
       list_aggregate(list_transform(shingles, s -> substring(md5(s), 25, 8)), 'min') AS mh3
 """
-
-
-@register(
-    "dedup_exact_kept",
-    """
-    WITH keepers AS (
-      SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
-    )
-    SELECT d.doc_id, d.lang, CAST(length(d.text) AS INT) AS n_len
-    FROM documents d JOIN keepers USING (doc_id)
-    """,
-)
-def q_dedup_exact_kept(spark, sf_dir):
-    """The kept-rows side of exact dedup: one row per distinct text
-    (min doc_id wins), via semi-join against the keeper set."""
-    docs = load(spark, sf_dir, "documents")
-    kept = dedup.exact_dedup(docs)
-    return kept.select("doc_id", "lang", F.length("text").cast("int").alias("n_len"))
-
-
-@register(
-    "dedup_minhash_signatures",
-    f"""
-    WITH w AS (SELECT doc_id, {_WORDS} AS words FROM documents),
-    sh AS (SELECT doc_id, {_SHINGLES} AS shingles FROM w)
-    SELECT doc_id, {_MINHASH_SIG_SQL}
-    FROM sh
-    """,
-)
-def q_dedup_minhash_signatures(spark, sf_dir):
-    return dedup.minhash_signatures(load(spark, sf_dir, "documents"))
 
 
 @register(
@@ -1169,11 +1055,6 @@ def _simhash_sig_sql() -> str:
     """
 
 
-@register("dedup_simhash", _simhash_sig_sql())
-def q_dedup_simhash(spark, sf_dir):
-    return dedup.simhash_signatures(load(spark, sf_dir, "documents"))
-
-
 @register(
     "dedup_simhash_pairs",
     f"""
@@ -1263,33 +1144,6 @@ def q_text_quality(spark, sf_dir):
 
 
 @register(
-    "tfidf_top_terms",
-    f"""
-    WITH terms AS (SELECT doc_id, unnest({_WORDS}) AS term FROM documents),
-    tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-           FROM terms GROUP BY 1, 2),
-    dfq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df
-            FROM (SELECT DISTINCT doc_id, term FROM terms) GROUP BY term),
-    n AS (SELECT COUNT(*) AS n_docs FROM documents),
-    scored AS (
-      SELECT tf.doc_id, tf.term, tf.tf, dfq.df,
-             round(tf.tf * (ln((n.n_docs + 1) * 1.0 / (dfq.df + 1)) + 1.0), 6) AS tfidf
-      FROM tf JOIN dfq USING (term), n
-    )
-    SELECT doc_id, term, tf, df, tfidf, rank FROM (
-      SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
-                     ORDER BY tfidf DESC, term) AS INT) AS rank
-      FROM scored
-    ) WHERE rank <= 3
-    """,
-)
-def q_tfidf_top_terms(spark, sf_dir):
-    """Per-doc top-3 terms by smoothed TF-IDF — the classic keyword /
-    importance-weighting primitive of a text pipeline."""
-    return text.tfidf_top_terms(load(spark, sf_dir, "documents"), k=3)
-
-
-@register(
     "corpus_hash_sample",
     """
     SELECT doc_id, lang,
@@ -1327,26 +1181,6 @@ def q_stratified_sample_per_lang(spark, sf_dir):
 
 
 @register(
-    "term_document_frequency",
-    f"""
-    WITH terms AS (
-      SELECT DISTINCT doc_id, unnest(list_distinct({_WORDS})) AS term FROM documents
-    ),
-    dfq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM terms GROUP BY term)
-    SELECT term, df, rank FROM (
-      SELECT term, df,
-             CAST(row_number() OVER (ORDER BY df DESC, term) AS INT) AS rank
-      FROM dfq
-    ) WHERE rank <= 20
-    """,
-)
-def q_term_document_frequency(spark, sf_dir):
-    """Vocabulary head: top-20 terms by document frequency — the
-    stop-word / boilerplate detection input."""
-    return text.term_document_frequency(load(spark, sf_dir, "documents"), k=20)
-
-
-@register(
     "unigram_logprob_score",
     f"""
     WITH terms AS (SELECT doc_id, unnest({_WORDS}) AS term FROM documents),
@@ -1363,35 +1197,6 @@ def q_unigram_logprob_score(spark, sf_dir):
     """KenLM-style quality proxy: mean token negative log-probability under
     an add-one-smoothed unigram model trained on the corpus itself."""
     return text.unigram_logprob_score(load(spark, sf_dir, "documents"))
-
-
-@register(
-    "quality_topk_per_lang",
-    r"""
-    WITH t AS (
-      SELECT doc_id, lang,
-             CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-             CAST(length(text) AS INT) AS n_len,
-             CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS INT) AS n_punct
-      FROM documents
-    ),
-    scored AS (
-      SELECT doc_id, lang,
-             round(least(n_tokens / 100.0, 1.0) * 0.5
-                   + (1.0 - n_punct * 1.0 / n_len) * 0.5, 6) AS quality_score
-      FROM t
-    )
-    SELECT doc_id, lang, quality_score, rank FROM (
-      SELECT *, CAST(row_number() OVER (PARTITION BY lang
-                     ORDER BY quality_score DESC, doc_id) AS INT) AS rank
-      FROM scored
-    ) WHERE rank <= 5
-    """,
-)
-def q_quality_topk_per_lang(spark, sf_dir):
-    """Keep-the-best-N-per-language: per-group quality top-k, the
-    selection step of a training-mix recipe."""
-    return text.quality_topk_per_group(load(spark, sf_dir, "documents"), k=5)
 
 
 @register(
@@ -1480,20 +1285,6 @@ def q_doc_winnow_fingerprints(spark, sf_dir):
         F.array_join("fingerprints", ",").alias("fingerprints"),
         "n_fingerprints",
     )
-
-
-@register(
-    "doc_fingerprint",
-    f"""
-    WITH w AS (SELECT doc_id, {_WORDS} AS words FROM documents)
-    SELECT doc_id,
-           md5(array_to_string(list_sort(list_distinct(words)), ' ')) AS fingerprint,
-           CAST(len(list_distinct(words)) AS INT) AS n_distinct_words
-    FROM w
-    """,
-)
-def q_doc_fingerprint(spark, sf_dir):
-    return text.fingerprint(load(spark, sf_dir, "documents"))
 
 
 _COS_SQL = """
@@ -1615,30 +1406,6 @@ def q_salted_stream_totals(spark, sf_dir):
         },
         n_salts=16,
     )
-
-
-@register(
-    "embedding_quantize_int8",
-    """
-    WITH v AS (SELECT vec_id,
-                      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS dv
-               FROM embeddings),
-    s AS (SELECT vec_id, dv,
-                 list_aggregate(list_transform(dv, x -> abs(x)), 'max') / 127.0
-                   AS scale
-          FROM v)
-    SELECT vec_id, round(scale, 6) AS scale,
-           CAST(len(dv) AS INT) AS n_dims,
-           array_to_string(
-             list_transform(dv, x -> CAST(CAST(floor(x / scale + 0.5) AS INT)
-                                          AS VARCHAR)), ',') AS codes
-    FROM s
-    """,
-)
-def q_embedding_quantize_int8(spark, sf_dir):
-    """Symmetric int8 embedding quantization (4x storage shrink before
-    indexing); floor(x+0.5) keeps the rounding engine-portable."""
-    return ann.quantize_int8(load(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -2260,138 +2027,6 @@ def q_q9_product_profit(spark, sf_dir):
 
 
 @register(
-    "q12_priority_lines",
-    """
-    SELECT l_linestatus,
-           CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-           CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-    GROUP BY l_linestatus
-    """,
-)
-def q_q12_priority_lines(spark, sf_dir):
-    """TPC-H Q12 shape: conditional counts by line status (fixture has no
-    l_shipmode, so lines are classed by l_linestatus).  The CASE sums
-    fold into one hash aggregate; the date filter pushes to the lineitem
-    scan before the join."""
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-    )
-
-
-@register(
-    "q14_promo_revenue",
-    f"""
-    SELECT ROUND(100.0 * {_DEC4.format(x="CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0 END")}
-                 / {_DEC4.format(x='l_extendedprice * (1 - l_discount)')}, 6) AS promo_revenue
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1997-10-01 00:00:00'
-    """,
-)
-def q_q14_promo_revenue(spark, sf_dir):
-    """TPC-H Q14 shape: promo revenue share for one month — broadcast the
-    part dim, single global aggregate, scalar result."""
-    p = load(spark, sf_dir, "part")
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-09-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-10-01 00:00:00").cast("timestamp"))
-    )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
-    return li.join(broadcast(p), li.l_partkey == p.p_partkey).agg(
-        F.round(F.lit(100.0) * _dec_sum(promo, 4) / _dec_sum(rev, 4), 6).alias(
-            "promo_revenue"
-        )
-    )
-
-
-@register(
-    "q15_top_supplier",
-    f"""
-    WITH revenue AS (
-      SELECT l_suppkey AS supplier_no,
-             {_DEC4.format(x='l_extendedprice * (1 - l_discount)')} AS total_revenue
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        AND l_shipdate <  TIMESTAMP '1997-04-01 00:00:00'
-      GROUP BY l_suppkey
-    )
-    SELECT s_suppkey, s_name, total_revenue
-    FROM supplier JOIN revenue ON s_suppkey = supplier_no
-    WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-    """,
-)
-def q_q15_top_supplier(spark, sf_dir):
-    """TPC-H Q15 shape: supplier(s) with the quarter's max revenue.  The
-    scalar MAX decorrelates to a 1-row broadcast cross join; the revenue
-    CTE is computed once and reused for both sides (Spark reuses the
-    exchange).  Revenue is a decimal sum cast to double on both engines,
-    so the equality compare is bit-exact."""
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
-    )
-    rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        _dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-            "total_revenue"
-        )
-    )
-    mx = rev.agg(F.max("total_revenue").alias("max_revenue"))
-    s = load(spark, sf_dir, "supplier")
-    return (
-        s.join(rev, s.s_suppkey == rev.supplier_no)
-        .join(broadcast(mx), F.col("total_revenue") == F.col("max_revenue"))
-        .select("s_suppkey", "s_name", "total_revenue")
-    )
-
-
-@register(
-    "q16_supplier_part_count",
-    """
-    SELECT p_brand, p_size, CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE p_brand <> 'Brand#1'
-      AND p_size IN (1, 5, 9, 13, 17, 21, 25, 29)
-      AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-    GROUP BY p_brand, p_size
-    """,
-)
-def q_q16_supplier_part_count(spark, sf_dir):
-    """TPC-H Q16 shape: distinct suppliers per part attribute (lineitem
-    stands in for partsupp; the NOT IN excluded set is negative-balance
-    suppliers instead of complaint comments).  NOT IN on a non-nullable
-    key plans as a broadcast anti-join; COUNT(DISTINCT) expands to a
-    two-level aggregate."""
-    bad = load(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
-    p = load(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#1") & F.col("p_size").isin(1, 5, 9, 13, 17, 21, 25, 29)
-    )
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.join(broadcast(bad), li.l_suppkey == bad.s_suppkey, "left_anti")
-        .join(broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
-
-
-@register(
     "q17_small_quantity_revenue",
     f"""
     SELECT ROUND({_DEC4.format(x='l_extendedprice')} / 7.0, 6) AS avg_yearly
@@ -2467,181 +2102,6 @@ def q_q18_large_volume_customers(spark, sf_dir):
         .agg(_dec_sum(F.col("l_quantity")).alias("sum_qty"))
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
         .limit(100)
-    )
-
-
-@register(
-    "q19_disjunctive_revenue",
-    f"""
-    SELECT {_DEC4.format(x='l_extendedprice * (1 - l_discount)')} AS revenue
-    FROM lineitem JOIN part ON p_partkey = l_partkey
-    WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5
-           AND l_quantity BETWEEN 1 AND 11)
-       OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10
-           AND l_quantity BETWEEN 10 AND 20)
-       OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
-           AND l_quantity BETWEEN 20 AND 30)
-    """,
-)
-def q_q19_disjunctive_revenue(spark, sf_dir):
-    """TPC-H Q19 shape: three-way disjunction mixing dim (brand/size) and
-    fact (quantity) predicates — Catalyst pushes the common
-    `l_quantity BETWEEN 1 AND 30` envelope below the join and keeps the
-    residual OR above it."""
-    li = load(spark, sf_dir, "lineitem")
-    p = load(spark, sf_dir, "part")
-
-    def arm(brand, size_hi, q_lo, q_hi):
-        return (
-            (F.col("p_brand") == brand)
-            & F.col("p_size").between(1, size_hi)
-            & F.col("l_quantity").between(q_lo, q_hi)
-        )
-
-    return (
-        li.join(broadcast(p), li.l_partkey == p.p_partkey)
-        .filter(arm("Brand#1", 5, 1, 11) | arm("Brand#2", 10, 10, 20) | arm("Brand#3", 15, 20, 30))
-        .agg(
-            _dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-                "revenue"
-            )
-        )
-    )
-
-
-@register(
-    "q2_min_cost_supplier",
-    """
-    WITH ps AS (
-      SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-             MIN(l_extendedprice / l_quantity) AS ps_unitcost
-      FROM lineitem GROUP BY l_partkey, l_suppkey
-    ),
-    joined AS (
-      SELECT s_acctbal, s_name, n_name, p_partkey, p_brand, ps_unitcost,
-             MIN(ps_unitcost) OVER (PARTITION BY p_partkey) AS min_cost
-      FROM part
-      JOIN ps       ON p_partkey = ps_partkey
-      JOIN supplier ON s_suppkey = ps_suppkey
-      JOIN nation   ON s_nationkey = n_nationkey
-      JOIN region   ON n_regionkey = r_regionkey
-      WHERE p_size < 10 AND r_name = 'EUROPE'
-    )
-    SELECT s_acctbal, s_name, n_name, p_partkey, p_brand,
-           ROUND(ps_unitcost, 6) AS unit_cost
-    FROM joined WHERE ps_unitcost = min_cost
-    """,
-)
-def q_q2_min_cost_supplier(spark, sf_dir):
-    """TPC-H Q2 shape: cheapest supplier per part within a region.  The
-    part-supplier relation is derived from lineitem (no partsupp in the
-    fixture) with unit cost = min observed price/quantity; the correlated
-    MIN decorrelates to a window over the joined, region-filtered set.
-    The float equality is safe: both engines take MIN over identical IEEE
-    quotients."""
-    li = load(spark, sf_dir, "lineitem")
-    ps = li.groupBy(
-        F.col("l_partkey").alias("ps_partkey"), F.col("l_suppkey").alias("ps_suppkey")
-    ).agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("ps_unitcost"))
-    p = load(spark, sf_dir, "part").filter(F.col("p_size") < 10)
-    s = load(spark, sf_dir, "supplier")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    w = Window.partitionBy("p_partkey")
-    return (
-        ps.join(broadcast(p), F.col("ps_partkey") == F.col("p_partkey"))
-        .join(broadcast(s), F.col("ps_suppkey") == F.col("s_suppkey"))
-        .join(broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"), "left_semi")
-        .withColumn("min_cost", F.min("ps_unitcost").over(w))
-        .filter(F.col("ps_unitcost") == F.col("min_cost"))
-        .select(
-            "s_acctbal", "s_name", "n_name", "p_partkey", "p_brand",
-            F.round("ps_unitcost", 6).alias("unit_cost"),
-        )
-    )
-
-
-@register(
-    "q11_important_parts",
-    f"""
-    WITH val AS (
-      SELECT l_partkey,
-             {_DEC4.format(x='l_extendedprice * (1 - l_discount)')} AS value
-      FROM lineitem
-      JOIN supplier ON l_suppkey = s_suppkey
-      JOIN nation   ON s_nationkey = n_nationkey
-      WHERE n_name IN ('NATION_1', 'NATION_2', 'NATION_3')
-      GROUP BY l_partkey
-    )
-    SELECT l_partkey, value FROM val
-    WHERE value > (SELECT {_DEC4.format(x='value')} * 0.001 FROM val)
-    """,
-)
-def q_q11_important_parts(spark, sf_dir):
-    """TPC-H Q11 shape: parts whose traded value from a nation group
-    exceeds a fraction of the group total (lineitem value stands in for
-    partsupp stock value).  The scalar total is a 1-row broadcast; the
-    per-part values are decimal-exact 4-dp doubles, so re-summing them
-    through DECIMAL is engine-independent."""
-    li = load(spark, sf_dir, "lineitem")
-    s = load(spark, sf_dir, "supplier")
-    n = load(spark, sf_dir, "nation").filter(
-        F.col("n_name").isin("NATION_1", "NATION_2", "NATION_3")
-    )
-    val = (
-        li.join(broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(broadcast(n), s.s_nationkey == n.n_nationkey, "left_semi")
-        .groupBy("l_partkey")
-        .agg(
-            _dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
-                "value"
-            )
-        )
-    )
-    total = val.agg((_dec_sum(F.col("value"), 4) * 0.001).alias("threshold"))
-    return (
-        val.join(broadcast(total), F.col("value") > F.col("threshold"))
-        .select("l_partkey", "value")
-    )
-
-
-@register(
-    "q20_part_promotion",
-    """
-    SELECT s_name, s_acctbal FROM supplier
-    WHERE s_suppkey IN (
-      SELECT l_suppkey FROM lineitem
-      WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE '%blue%')
-        AND l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-      GROUP BY l_suppkey
-      HAVING SUM(l_quantity) > 100
-    )
-    """,
-)
-def q_q20_part_promotion(spark, sf_dir):
-    """TPC-H Q20 shape: suppliers who moved real volume of a named part
-    family in a year (availqty is not in the fixture, so the threshold is
-    on shipped quantity).  Two chained semi-joins: parts→lineitem
-    (broadcast) and the HAVING aggregate→supplier."""
-    p = load(spark, sf_dir, "part").filter(F.col("p_name").like("%blue%")).select(
-        "p_partkey"
-    )
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-    )
-    movers = (
-        li.join(broadcast(p), li.l_partkey == p.p_partkey, "left_semi")
-        .groupBy("l_suppkey")
-        .agg(_dec_sum(F.col("l_quantity")).alias("q"))
-        .filter(F.col("q") > 100)
-        .select("l_suppkey")
-    )
-    s = load(spark, sf_dir, "supplier")
-    return s.join(broadcast(movers), s.s_suppkey == movers.l_suppkey, "left_semi").select(
-        "s_name", "s_acctbal"
     )
 
 
@@ -2731,51 +2191,6 @@ def q_q21_sole_returner(spark, sf_dir):
         .join(broadcast(n), s.s_nationkey == n.n_nationkey, "left_semi")
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
-    )
-
-
-@register(
-    "q22_idle_customers",
-    f"""
-    SELECT cntrycode, CAST(COUNT(*) AS BIGINT) AS numcust,
-           {_DEC2.format(x='c_acctbal')} AS totacctbal
-    FROM (
-      SELECT CAST(c_nationkey % 7 AS INT) AS cntrycode, c_acctbal
-      FROM customer
-      WHERE c_nationkey % 7 IN (0, 1, 2, 3)
-        AND c_acctbal > (SELECT {_DEC2.format(x='c_acctbal')} / COUNT(*)
-                         FROM customer
-                         WHERE c_acctbal > 0 AND c_nationkey % 7 IN (0, 1, 2, 3))
-        AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-                        AND o_orderdate >= TIMESTAMP '1999-01-01 00:00:00')
-    )
-    GROUP BY cntrycode
-    """,
-)
-def q_q22_idle_customers(spark, sf_dir):
-    """TPC-H Q22 shape: above-average-balance customers with no *recent*
-    orders, grouped by a nation-derived code (the fixture has no phone
-    column, and every customer has at least one historical order, so the
-    anti-join is scoped to orders since 1999 to stay non-trivial).
-    Scalar-avg broadcast + anti-join against orders."""
-    c = load(spark, sf_dir, "customer").filter((F.col("c_nationkey") % 7).isin(0, 1, 2, 3))
-    o = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") >= F.lit("1999-01-01 00:00:00").cast("timestamp"))
-        .select("o_custkey")
-    )
-    avg_bal = c.filter(F.col("c_acctbal") > 0).agg(
-        (_dec_sum(F.col("c_acctbal")) / F.count(F.lit(1))).alias("avg_bal")
-    )
-    return (
-        c.join(broadcast(avg_bal), F.col("c_acctbal") > F.col("avg_bal"))
-        .join(o, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .select((F.col("c_nationkey") % 7).cast("int").alias("cntrycode"), "c_acctbal")
-        .groupBy("cntrycode")
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            _dec_sum(F.col("c_acctbal")).alias("totacctbal"),
-        )
     )
 
 
@@ -3281,33 +2696,6 @@ def q_pii_redaction(spark, sf_dir):
         "n_phone",
         F.md5("redacted_text").alias("redacted_md5"),
     )
-
-
-@register(
-    "training_mix_weights",
-    """
-    WITH stats AS (
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(CAST(len(string_split(text, ' ')) AS BIGINT)) AS BIGINT)
-               AS total_tokens
-      FROM documents GROUP BY source
-    ),
-    tot AS (
-      SELECT SUM(total_tokens) AS corpus_tokens, COUNT(*) AS n_sources FROM stats
-    )
-    SELECT source, n_docs, total_tokens,
-           round(CAST(total_tokens AS DOUBLE) / CAST(corpus_tokens AS DOUBLE), 6)
-             AS natural_share,
-           round((1.0 / CAST(n_sources AS DOUBLE))
-                 / (CAST(total_tokens AS DOUBLE) / CAST(corpus_tokens AS DOUBLE)), 6)
-             AS mix_weight
-    FROM stats, tot
-    """,
-)
-def q_training_mix_weights(spark, sf_dir):
-    """Mixture-design table: each source's natural token share and the
-    uniform-target sampling weight (>1 = upsample)."""
-    return text.training_mix_weights(load(spark, sf_dir, "documents"))
 
 
 @register(
@@ -4736,63 +4124,6 @@ def q_embedding_pca_power_iter(spark, sf_dir):
 
 
 @register(
-    "embedding_pca_scores",
-    _pca_power_sql(64, 30).replace(
-        """
-    SELECT i AS dim_index, round(val, 6) AS loading,
-           round((SELECT e FROM eig), 6) AS eigenvalue
-    FROM vf""",
-        """,
-    centered AS (
-      -- round(val, 6): the Spark side broadcasts the ROUNDED loadings
-      -- (the public output of the PCA entry), so the oracle must project
-      -- with the same precision
-      SELECT e.vec_id, v.i,
-             (CAST(e.embedding[v.i] AS DOUBLE) - m.s / st.n) * round(v.val, 6) AS t
-      FROM embeddings e, vf v JOIN m ON v.i = m.i, st
-    )
-    SELECT vec_id, round(SUM(t), 6) AS pc1_score
-    FROM centered GROUP BY vec_id""",
-    ),
-)
-def q_embedding_pca_scores(spark, sf_dir):
-    """Dimensionality-reduced feature: each vector's mean-centered
-    projection onto the top principal component — the 1-D embedding
-    summary used for curriculum ordering / outlier screens.  The
-    component comes from the same distributed Gram pass; the projection
-    is a broadcast of the 64-float loading vector against the corpus
-    scan (one dot product per row, no shuffle)."""
-    emb = load(spark, sf_dir, "embeddings")
-    comp = ann.pca_top_component(emb, dim=64, iters=30)
-    rows = sorted(
-        ((r["dim_index"], r["loading"]) for r in comp.collect())
-    )
-    loadings = [v for _, v in rows]
-    # corpus mean per dim for centering (same pass shape as the component)
-    means = (
-        emb.select(F.posexplode(ann._as_double(F.col("embedding"))).alias("i0", "x"))
-        .groupBy("i0")
-        .agg((F.sum("x") / F.count(F.lit(1))).alias("mval"))
-        .collect()
-    )
-    mean = [r["mval"] for r in sorted(means, key=lambda r: r["i0"])]
-    lv = ann.lit_vector(loadings)
-    mv = ann.lit_vector(mean)
-    centered = F.zip_with(ann._as_double(F.col("embedding")), mv, lambda a, b: a - b)
-    return emb.select(
-        "vec_id",
-        F.round(
-            F.aggregate(
-                F.zip_with(centered, lv, lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        ).alias("pc1_score"),
-    )
-
-
-@register(
     "log_roundtrip_resend",
     f"""
     WITH s AS ({EVENTS_AS_STREAM_SQL})
@@ -5406,8 +4737,8 @@ def q_quality_classifier_score(spark, sf_dir):
 def q_temperature_mix_allocation(spark, sf_dir):
     """mT5-style temperature sampling (alpha=0.3): per-source natural
     share, temperature-flattened target share, and the repeat factor to
-    realize it — interpolates between natural (alpha=1) and the uniform
-    target of `training_mix_weights` (alpha=0)."""
+    realize it — interpolates between natural (alpha=1) and a uniform
+    mix across sources (alpha=0)."""
     return text.temperature_mix_allocation(load(spark, sf_dir, "documents"))
 
 
@@ -12002,7 +11333,7 @@ _AUDIT_PRIORITY = [
     # the FULL r7-aged cohort — the 28 entries whose newest driver row
     # is still r7, queued verbatim by the r12 verdict, (3) the r8
     # cohort's head (alphabetical) filling the window; its tail
-    # (dedup_simhash ... metadata_counts onward) heads round 14.
+    # (dedup_simhash_pairs ... metadata_counts onward) heads round 14.
     # -- (0) NEW in round 13: the oracle-certified drift metric
     "dedup_prefix_index_drift",
     # -- (1) code touched this round
@@ -12046,15 +11377,12 @@ _AUDIT_PRIORITY = [
     # -- (3) the r8 cohort's head (alphabetical), filling the window
     "cusum_daily_alarms",
     "dedup_exact_groups",
-    "dedup_exact_kept",
     "dedup_graph_triangles_guarded",
     "dedup_minhash_pairs",
     "dedup_minhash_pairs_guarded",
-    "dedup_minhash_signatures",
     "dedup_ngram_jaccard",
     "dedup_ngram_jaccard_guarded",
     "distinct_stream_partitions",
-    "doc_fingerprint",
 ]
 
 

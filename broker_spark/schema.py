@@ -57,6 +57,13 @@ STREAM_MESSAGE_SCHEMA = StructType(
     ]
 )
 
+#: The log as stored: the envelope plus the derived `bucket` partition
+#: column.  Reads pin it, so partition values keep these types whatever
+#: they look like (stream ids `007` and `7` stay two strings).
+STREAM_LOG_SCHEMA = StructType(
+    STREAM_MESSAGE_SCHEMA.fields + [StructField("bucket", LongType(), True)]
+)
+
 #: Total-order within a stream-partition — reference src/storage/Storage.ts:111
 ORDERING_COLUMNS = ["ts", "sequence_no", "publisher_id", "msg_chain_id"]
 

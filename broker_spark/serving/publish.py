@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import logging
 import re
 import threading
 import time
@@ -23,6 +24,8 @@ from typing import Any
 
 from broker_spark.functions.partitioner import partition_for_key
 from broker_spark.storage.store import Storage
+
+log = logging.getLogger(__name__)
 
 # src/Publisher.ts:6 — +300 s future threshold
 THRESHOLD_FOR_FUTURE_MESSAGES_IN_MS = 300 * 1000
@@ -238,9 +241,22 @@ class PublishSpool:
         return partition
 
     def _arm_timer(self) -> None:
-        self._timer = threading.Timer(self.close_timeout_s, self.flush)
+        self._timer = threading.Timer(self.close_timeout_s, self._timer_flush)
         self._timer.daemon = True
         self._timer.start()
+
+    def _timer_flush(self) -> None:
+        """The close-timeout timer's flush.  A failed commit is already
+        counted and re-armed for retry, so it is logged here rather than
+        left to kill the timer thread; `flush()` and `close()` called
+        directly still raise."""
+        try:
+            self.flush()
+        except Exception:
+            log.exception(
+                "spool commit failed; the batch stays buffered and is retried"
+                " in %.1f s", self.close_timeout_s,
+            )
 
     def flush(self) -> None:
         with self._lock:

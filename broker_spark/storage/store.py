@@ -8,6 +8,12 @@ lazily-planned DataFrame; the serving layer decides how to consume it
 the reference's pause/resume row streaming at 412-435) — and the metadata
 numbers (first/last message ts, message count, total bytes, 452-576).
 
+Stream ids are stored as directory names (`stream_id=<escaped id>`), so
+any string round-trips unchanged: `/`, `:`, `%`, `=`, spaces, quotes,
+unicode, and ids that look numeric.  The one exception is the literal
+`__HIVE_DEFAULT_PARTITION__`, Spark's directory name for a NULL partition
+value: its messages read back with a NULL stream id.
+
 Metadata is one rollup (`operators.metadata.summarize`) with two sources:
 the maintained bucket summary when `summary_path` can be read, otherwise
 the log read as one-message summary rows.  Storage only picks the source.
@@ -21,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from broker_spark.operators import metadata, resend
-from broker_spark.schema import DEFAULT_BUCKET_MS
+from broker_spark.schema import DEFAULT_BUCKET_MS, STREAM_LOG_SCHEMA
 from broker_spark.storage.writer import if_written, read_stream_data, write_stream_data
 
 
@@ -93,10 +99,7 @@ class Storage:
         log = self._written_log()
         if log is not None:
             return log
-        from broker_spark.schema import STREAM_MESSAGE_SCHEMA
-
-        empty = self.spark.createDataFrame([], STREAM_MESSAGE_SCHEMA)
-        return empty.withColumn("bucket", F.lit(0).cast("long")).filter(F.lit(False))
+        return self.spark.createDataFrame([], STREAM_LOG_SCHEMA)
 
     def request_last(self, stream_id: str, partition: int, n: int) -> DataFrame:
         return resend.request_last(

@@ -23,11 +23,13 @@ from collections.abc import Callable
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from broker_spark.schema import (
     DEFAULT_BUCKET_MS,
     ORDERING_COLUMNS,
     PARTITION_COLUMNS,
+    STREAM_LOG_SCHEMA,
     with_bucket,
 )
 
@@ -35,6 +37,9 @@ from broker_spark.schema import (
 #: path does not exist, or its tree holds no data files (e.g. retention
 #: dropped every bucket).
 _NOTHING_WRITTEN = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+#: The partition columns a log's directories name, as Spark prints them.
+_LOG_PARTITIONS = StructType([STREAM_LOG_SCHEMA[c] for c in PARTITION_COLUMNS]).simpleString()
 
 
 def write_stream_data(
@@ -76,7 +81,8 @@ def compact_partitions(
     (src/storage/BucketManager.ts:51).  Run it on closed (past) buckets so
     it never races the live writer.
     """
-    df = spark.read.parquet(path)
+    # merged, so a column the envelope gained survives the rewrite
+    df = read_stream_data(spark, path, merge_schema=True)
     if predicate is not None:
         df = df.filter(predicate)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -146,16 +152,38 @@ def read_stream_data(
     before any file is opened — the two-level bucket-index lookup
     (src/storage/BucketManager.ts:228-264) for free.
 
+    The log is read with its fixed schema (`STREAM_LOG_SCHEMA`), never
+    an inferred one: opening lists files but reads no footer and runs no
+    job, a log with no data files reads as empty, and a partition value
+    that looks numeric stays what was written (inference would turn
+    stream ids `007` and `7` into the one int 7).  A missing path raises
+    `PATH_NOT_FOUND`; data files outside the stream_id=/partition=/
+    bucket= directories raise ValueError.
+
     `merge_schema=True` unions the schemas of all parquet footers, so a
     log whose envelope gained columns over its lifetime (the Cassandra
     ALTER TABLE analog) reads as one frame with nulls for the old files'
-    missing columns.  Off by default: schema merging reads every footer,
-    which matters at millions of files — flip it only after an envelope
+    missing columns; the envelope and partition columns keep their fixed
+    types.  Off by default: schema merging reads every footer, which
+    matters at millions of files — flip it only after an envelope
     migration, then compact to rewrite old partitions at the new schema."""
-    reader = spark.read
+    schema = STREAM_LOG_SCHEMA
     if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(path)
+        merged = if_written(lambda: spark.read.option("mergeSchema", "true").parquet(path))
+        if merged is not None:
+            extra = [f for f in merged.schema.fields if f.name not in schema.fieldNames()]
+            schema = StructType(schema.fields + extra)
+    df = spark.read.schema(schema).parquet(path)
+    relation = df._jdf.queryExecution().analyzed().relation()
+    if (
+        relation.partitionSchema().simpleString() != _LOG_PARTITIONS
+        and relation.sizeInBytes() > 0
+    ):
+        raise ValueError(
+            f"{path} is not a message log: its data files are not all under "
+            "stream_id=/partition=/bucket= directories"
+        )
+    return df
 
 
 def if_written(read: Callable[[], DataFrame]) -> DataFrame | None:

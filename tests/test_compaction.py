@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 import glob
+import os
 
 from broker_spark.storage.store import Storage
 from broker_spark.storage.writer import compact_partitions
@@ -54,6 +55,45 @@ def test_compaction_predicate_leaves_other_partitions(spark, tmp_path):
     assert len(glob.glob(f"{path}/stream_id=a/partition=0/bucket=0/*.parquet")) < 3
     assert st.request_last("a", 0, 10).count() == 3
     assert st.request_last("b", 0, 10).count() == 3
+
+
+def test_compaction_keeps_numeric_looking_stream_ids_apart(spark, tmp_path):
+    """`007` and `7` are two streams: after compaction each message exists
+    exactly once, in its own stream's directory."""
+    path = str(tmp_path / "numeric-log")
+    st = Storage(spark, path, bucket_ms=10_000)
+    for sid, n in (("007", 3), ("7", 2)):
+        for k in range(n):
+            st.store(spark.createDataFrame(_rows(sid, [1000 + k]), ENVELOPE))
+    compact_partitions(spark, path)
+    assert sorted(d for d in os.listdir(path) if d.startswith("stream_id=")) == [
+        "stream_id=007",
+        "stream_id=7",
+    ]
+    for sid, n in (("007", 3), ("7", 2)):
+        files = glob.glob(f"{path}/stream_id={sid}/partition=0/bucket=0/*.parquet")
+        stored = spark.read.parquet(*files).select("ts").collect()
+        assert sorted(r["ts"] for r in stored) == [
+            dt.datetime.utcfromtimestamp((1000 + k) / 1000.0) for k in range(n)
+        ]
+
+
+def test_compaction_keeps_an_evolved_column(spark, tmp_path):
+    """Compaction rewrites with the merged schema: a column only newer
+    files carry survives, null for the older rows."""
+    import pyspark.sql.functions as F
+
+    from broker_spark.storage.writer import read_stream_data, write_stream_data
+
+    path = str(tmp_path / "evo-compact")
+    write_stream_data(spark.createDataFrame(_rows("s", [1000, 2000]), ENVELOPE), path)
+    v2 = spark.createDataFrame(_rows("s", [3000]), ENVELOPE).withColumn(
+        "trace_id", F.lit("t-1")
+    )
+    write_stream_data(v2, path)
+    compact_partitions(spark, path)
+    got = read_stream_data(spark, path, merge_schema=True).orderBy("ts").collect()
+    assert [r["trace_id"] for r in got] == [None, None, "t-1"]
 
 
 def test_schema_evolution_merge_schema(spark, tmp_path):

@@ -5,6 +5,8 @@ back out of a resend query."""
 from __future__ import annotations
 
 import json
+import logging
+import threading
 import time
 import urllib.error
 import urllib.request
@@ -228,3 +230,46 @@ def test_failed_flush_keeps_every_acked_message(spark, tmp_path, lands):
     stored = [r["sequence_no"] for r in st.request_last("s", 0, 100).collect()]
     assert sorted(stored) == list(range(6))
     assert counter("storage.writeFailures") == 1
+
+
+def test_failed_timer_flush_is_logged_not_raised(spark, tmp_path, monkeypatch, caplog):
+    """A commit that fails on the close-timeout timer thread is logged once,
+    with its traceback, instead of escaping as an unhandled thread
+    exception; the retry still stores every acked message exactly once."""
+    escaped = []
+    monkeypatch.setattr(threading, "excepthook", escaped.append)
+    metrics = MetricsContext()
+    st = _FirstCommitFails(spark, str(tmp_path / "log"), lands=False)
+    spool = PublishSpool(st, close_timeout_s=0.2, metrics=metrics)
+    with caplog.at_level(logging.ERROR, logger="broker_spark.serving.publish"):
+        for i in range(6):
+            spool.publish(
+                PublishRequest("s", json.dumps({"i": i}), timestamp=1000 + i, sequence_number=i),
+                now_ms=10_000,
+            )
+        deadline = time.monotonic() + 60
+        while (
+            metrics.report()["metrics"].get("storage.writeMessages", {}).get("total", 0) < 6
+            and time.monotonic() < deadline
+        ):
+            time.sleep(0.1)
+        spool.close()
+
+    assert escaped == []
+    logged = [r for r in caplog.records if r.name == "broker_spark.serving.publish"]
+    assert len(logged) == 1
+    assert str(logged[0].exc_info[1]) == "injected commit failure"
+    stored = [r["sequence_no"] for r in st.request_last("s", 0, 100).collect()]
+    assert sorted(stored) == list(range(6))
+
+
+def test_direct_flush_still_raises(spark, tmp_path):
+    """Only the timer's call swallows a failed commit: `flush()` called
+    directly raises, and the batch stays buffered for the next commit."""
+    st = _FirstCommitFails(spark, str(tmp_path / "log"), lands=False)
+    spool = PublishSpool(st, close_timeout_s=30.0)
+    spool.publish(PublishRequest("s", "{}", timestamp=1000), now_ms=10_000)
+    with pytest.raises(OSError, match="injected commit failure"):
+        spool.flush()
+    spool.close()
+    assert st.request_last("s", 0, 10).count() == 1

@@ -8,6 +8,7 @@ from __future__ import annotations
 import datetime
 import json
 import urllib.error
+import urllib.parse
 import urllib.request
 
 import pytest
@@ -179,6 +180,61 @@ def test_encoded_stream_id_in_path(spark, tmp_path):
         )
         assert status == 200
         assert [m[1][0] for m in json.loads(body)] == ["domain/stream:1"]
+    finally:
+        server.shutdown()
+
+
+def test_special_stream_ids_round_trip_over_http(spark, tmp_path):
+    """Stream ids with '/', ':', '%', '=', spaces, unicode and quotes arrive
+    percent-encoded: publish -> flush -> resend last/from/range ->
+    metadata must answer exactly that stream's messages, with the id
+    unchanged.  (`__HIVE_DEFAULT_PARTITION__` reads back as NULL; see
+    `Storage`.)"""
+    from broker_spark.serving.publish import PublishSpool
+
+    sids = ["a/b", "x:y", "p%20q", "k=v", "sp ace", "ünï", "q'uo\"te",
+            "0xAbC/streamr/node/metrics/sec"]
+    st = Storage(spark, str(tmp_path / "special-log"), bucket_ms=3_600_000)
+    spool = PublishSpool(st, partition_count=1, close_timeout_s=30.0)
+    server = serving_http.serve(st, spool=spool)
+    host, port = server.server_address
+    base = f"http://{host}:{port}/streams"
+
+    def n_msgs(k):  # a different message count per stream
+        return k % 3 + 1
+
+    try:
+        for k, sid in enumerate(sids):
+            enc = urllib.parse.quote(sid, safe="")
+            for i in range(n_msgs(k)):
+                req = urllib.request.Request(
+                    f"{base}/{enc}/data?ts={1000 + i * 1000}&seq={k}",
+                    data=json.dumps({"sid": sid, "i": i}).encode(),
+                    method="POST",
+                )
+                with urllib.request.urlopen(req, timeout=60) as r:
+                    assert r.status == 200
+        spool.flush()
+        for k, sid in enumerate(sids):
+            enc = urllib.parse.quote(sid, safe="")
+            want_ts = [1000 + i * 1000 for i in range(n_msgs(k))]
+            for suffix in (
+                "last?count=10",
+                "from?fromTimestamp=0",
+                "range?fromTimestamp=0&toTimestamp=10000",
+            ):
+                status, _, body = _get(f"{base}/{enc}/data/partitions/0/{suffix}")
+                assert status == 200, (sid, suffix)
+                msgs = json.loads(body)
+                assert [m[1][0] for m in msgs] == [sid] * len(want_ts), (sid, suffix)
+                assert [m[1][2] for m in msgs] == want_ts, (sid, suffix)
+                assert {json.loads(m[6])["sid"] for m in msgs} == {sid}
+            status, _, body = _get(f"{base}/{enc}/metadata/partitions/0")
+            assert status == 200
+            meta = json.loads(body)
+            assert (meta["totalMessages"], meta["firstMessage"], meta["lastMessage"]) == (
+                len(want_ts), want_ts[0], want_ts[-1]
+            ), sid
     finally:
         server.shutdown()
 

@@ -134,3 +134,27 @@ def test_unreadable_log_raises(spark, tmp_path):
         st.store_idempotent(
             spark.createDataFrame([make_msg("s", 0, 1000, 0)], STREAM_MESSAGE_SCHEMA)
         )
+
+
+@pytest.mark.parametrize("ids_", [("007", "7"), ("1e3", "1000")], ids=["007_7", "1e3_1000"])
+def test_numeric_looking_stream_ids_stay_distinct(spark, tmp_path, ids_):
+    """A log whose every stream id looks numeric: `007` and `7` are two
+    streams, not the one int 7.  Each resend and metadata answer holds
+    only its own stream's messages, with the id as written."""
+    st = Storage(spark, str(tmp_path / "numeric"), bucket_ms=1000)
+    a, b = ids_
+    rows = [make_msg(a, 0, 1000 + i, i) for i in range(3)] + [
+        make_msg(b, 0, 1000 + i, 10 + i) for i in range(2)
+    ]
+    st.store(spark.createDataFrame(rows, STREAM_MESSAGE_SCHEMA))
+    for sid, seqs in ((a, [0, 1, 2]), (b, [10, 11])):
+        for df in (
+            st.request_last(sid, 0, 100),
+            st.request_from(sid, 0, 0),
+            st.request_range(sid, 0, 0, 0, 5000, 0),
+        ):
+            out = df.collect()
+            assert [r["sequence_no"] for r in out] == seqs
+            assert [r["stream_id"] for r in out] == [sid] * len(seqs)
+        meta = st.partition_metadata(sid, 0)
+        assert (meta["totalMessages"], meta["firstMessage"]) == (len(seqs), 1000)

@@ -37,8 +37,10 @@ Usage:
 
 `--entries` times the named catalog entries instead of the HEAVY set.
 Prints a markdown table to stdout; BENCH_SCALE.md is the hand-kept record
-the table is appended to. The scaled parquet lives under .scale/
-(gitignored); this tool is NOT part of the driver bench contract.
+the table is appended to. The scaled parquet lives under
+.scale/<source dir name>x<copies> (gitignored; the source is
+$SPARK_GRAFT_SF_DIR, default sf0.1); this tool is NOT part of bench.py's
+headline contract.
 """
 
 from __future__ import annotations
@@ -299,7 +301,9 @@ def main() -> None:
     args = ap.parse_args()
 
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    dst = os.path.join(REPO, ".scale", f"sf0.1x{args.copies}")
+    # named after the source, so a replica of another dataset is never reused
+    src_name = os.path.basename(os.path.normpath(src))
+    dst = os.path.join(REPO, ".scale", f"{src_name}x{args.copies}")
     spark = get_spark(app_name="broker-spark-scale")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -318,7 +322,7 @@ def main() -> None:
         "(1.5x the data growth) = super-linear, flagged."
     )
     print()
-    print(f"| query | t(sf0.1) s | t({args.copies}x) s | ratio | verdict |")
+    print(f"| query | t({src_name}) s | t({args.copies}x) s | ratio | verdict |")
     print("|---|---|---|---|---|")
     flags = []
     for name in args.entries:
