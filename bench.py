@@ -333,7 +333,7 @@ NOT_BENCHED_SIBLING_REASONS = {
     "dedup_prefix_filter_incremental": "new-vs-corpus form of benched dedup_prefix_filter_pairs (same prefix pipeline, split input)",
     "dedup_pagerank_keepers": "keeper selection over dedup_graph_pagerank's scores (same graph)",
     "distinct_stream_partitions": "DISTINCT projection of the scan benched as metadata_counts",
-    "doc_winnow_fingerprints": "winnowing variant of doc_fingerprint (same rolling-hash scan)",
+    "doc_winnow_fingerprints": "fingerprint-stage component of benched substring_dup_pairs (it calls text.winnow_fingerprints)",
     "events_lag_deltas": "lag-window sibling of benched events_gap_fill (same events scan)",
     "events_pivot_daily": "pivot form of benched events_hourly_rollup",
     "grouping_sets_order_stats": "GROUPING SETS form of benched rollup_order_stats",

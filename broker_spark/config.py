@@ -154,7 +154,13 @@ class Broker:
 
 def start_broker(spark, config: dict) -> Broker:
     """Validate the config, open the log, start the configured adapters
-    (src/broker.ts:28-160; per-adapter start mirrors adapterRegistry.ts)."""
+    (src/broker.ts:28-160; per-adapter start mirrors adapterRegistry.ts).
+
+    This engine runs storage nodes only: every node serves resends from
+    its own log.  A config that validates as a non-storage node
+    (`isStorageNode: false` plus a `storageNodeRegistry`) raises
+    ValueError before any adapter starts — proxying resends to the
+    registry's storage nodes is not implemented."""
     from broker_spark.jobs.stream_metrics import MetricsContext, start_cascade
     from broker_spark.serving import http as http_adapter
     from broker_spark.serving import mqtt as mqtt_adapter
@@ -164,6 +170,8 @@ def start_broker(spark, config: dict) -> Broker:
     from broker_spark.storage.store import Storage
 
     validate_config(config)
+    if not config["network"]["isStorageNode"]:
+        raise ValueError("this engine runs storage nodes only (isStorageNode: false)")
     storage_cfg = config.get("storage") or {}
     metrics = MetricsContext()
     storage = Storage(

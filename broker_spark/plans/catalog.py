@@ -5245,9 +5245,9 @@ def q_streaming_exact_dedup_replay(spark, sf_dir):
     oracle — certifying that state-store dedup emits exactly the distinct
     content set.  Output is the hash set itself (which duplicate arrives
     first is racy across partitions; the distinct SET is deterministic).
-    Production ingestion uses the watermark-bounded form
-    (`dropDuplicatesWithinWatermark`, streaming/ingest.py); the unbounded
-    state here is safe for a finite replay."""
+    Production ingestion keeps no dedup state: its writer's anti-join
+    against the touched buckets drops re-published ids (streaming/
+    ingest.py); the unbounded state here is safe for a finite replay."""
     import shutil
     import tempfile
 

@@ -71,7 +71,9 @@ def kafka_stream(
     """`readStream.format("kafka")` → envelope columns (streaming frame).
 
     Requires the spark-sql-kafka connector on the session classpath; the
-    returned frame plugs into `streaming.ingest.start_ingest` unchanged."""
+    returned frame is `streaming.ingest.start_ingest`'s `source`, so Kafka
+    messages reach the log through `Storage.store_idempotent` like every
+    other write (a redelivered offset range stores nothing twice)."""
     raw = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)

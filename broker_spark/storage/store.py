@@ -27,7 +27,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from broker_spark.operators import metadata, resend
-from broker_spark.schema import DEFAULT_BUCKET_MS, STREAM_LOG_SCHEMA
+from broker_spark.schema import (
+    DEFAULT_BUCKET_MS,
+    MESSAGE_ID_COLUMNS,
+    PARTITION_COLUMNS,
+    STREAM_LOG_SCHEMA,
+    with_bucket,
+)
 from broker_spark.storage.writer import if_written, read_stream_data, write_stream_data
 
 
@@ -59,31 +65,30 @@ class Storage:
     def store_idempotent(self, df: DataFrame) -> None:
         """Append with primary-key dedup — Cassandra INSERT semantics
         (re-publishing a message id is a no-op, src/storage/
-        BatchManager.ts:8-10 primary key).
+        BatchManager.ts:8-10 primary key).  Streaming ingest commits every
+        micro-batch through it, so a replayed batch stores nothing.
 
         Parquet append would duplicate, so: dedup within the batch, then
-        anti-join against the EXISTING rows of only the affected
-        (stream, partition, bucket) partitions — directory-pruned, so the
-        read side is proportional to the buckets being written, never the
-        log.  Concurrent writers to the same bucket still need a
-        table-format transaction (Delta/Iceberg) — single-writer-per-
-        partition is this layout's contract, as in the reference.
+        anti-join against the stored ids of only the streams, partitions
+        and buckets the batch touches — directory-pruned, so the read side
+        is proportional to the buckets being written, never the log (a
+        batch whose stream-partitions touch different buckets also reads
+        the existing directories of their cross product).  Concurrent
+        writers to the same bucket still need a table-format transaction
+        (Delta/Iceberg) — single-writer-per-partition is this layout's
+        contract, as in the reference.
         """
-        from broker_spark.schema import MESSAGE_ID_COLUMNS, with_bucket
-
         incoming = with_bucket(df, bucket_ms=self.bucket_ms).dropDuplicates(
             MESSAGE_ID_COLUMNS
         )
-        existing = self._written_log()
-        if existing is None:  # first write: nothing to dedup against
-            write_stream_data(df.dropDuplicates(MESSAGE_ID_COLUMNS), self.path,
-                              bucket_ms=self.bucket_ms)
-            return
-        touched = [r["bucket"] for r in incoming.select("bucket").distinct().collect()]
-        scoped = existing.filter(F.col("bucket").isin(touched)).select(
-            *MESSAGE_ID_COLUMNS
-        )
-        fresh = incoming.join(scoped, MESSAGE_ID_COLUMNS, "left_anti").drop("bucket")
+        touched = incoming.select(*PARTITION_COLUMNS).distinct().collect()
+        scope = F.lit(True)
+        # one flat IN list per column: an OR term per directory overflows
+        # the JVM stack at ~1000 directories
+        for c in PARTITION_COLUMNS:
+            scope &= F.col(c).isin(list({r[c] for r in touched}))
+        stored = self._log().filter(scope).select(*MESSAGE_ID_COLUMNS)
+        fresh = incoming.join(stored, MESSAGE_ID_COLUMNS, "left_anti")
         write_stream_data(fresh, self.path, bucket_ms=self.bucket_ms)
 
     # -- read path ----------------------------------------------------------

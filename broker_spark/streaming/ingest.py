@@ -7,10 +7,12 @@ src/Publisher.ts:45-46), assign a partition from the partition key
 (src/storage/BatchManager.ts).
 
 Spark-first: one `readStream` per ingest topic -> the SAME validation
-filters as column expressions -> `writeStream` into the partitioned log.
-Micro-batch triggers subsume the reference's hand-rolled size/time batch
-flushes; checkpointing subsumes its retry loop; derivable buckets subsume
-BucketManager (late rows just land in old partitions — W2).
+filters as column expressions -> `foreachBatch` into `Storage.store_idempotent`,
+the one writer of the partitioned log (the same call the gateway's spool
+retries through).  Micro-batch triggers subsume the reference's hand-rolled
+size/time batch flushes; checkpoint + idempotent store subsume its retry
+loop; derivable buckets subsume BucketManager (late rows just land in old
+partitions — W2).
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from broker_spark.functions.partitioner import keyed_partition
-from broker_spark.schema import DEFAULT_BUCKET_MS, PARTITION_COLUMNS, bucket_of
+from broker_spark.storage.store import Storage
 
 # Reference rejects messages more than +300 s in the future
 # (src/Publisher.ts:5-9) and non-storage nodes TTL at 3 days
@@ -52,48 +54,29 @@ def assign_partition(df: DataFrame, partition_count: int, key_col: str = "partit
     ).drop(key_col)
 
 
-def prepare(df: DataFrame, bucket_ms: int = DEFAULT_BUCKET_MS) -> DataFrame:
-    """Attach the derived bucket column (W2: late data needs no special
-    path — `bucket = f(ts)` routes it to the right old partition)."""
-    return df.withColumn("bucket", bucket_of(F.col("ts"), bucket_ms))
-
-
 def start_ingest(
     source: DataFrame,
-    path: str,
+    storage: Storage,
     checkpoint: str,
-    bucket_ms: int = DEFAULT_BUCKET_MS,
     trigger_available_now: bool = False,
     processing_time: str | None = None,
-    dedup_watermark: str | None = None,
 ) -> StreamingQuery:
-    """Validated, partitioned, checkpointed append into the message log.
+    """Validated, checkpointed ingest into `storage`'s message log.
 
     `source` must already have the envelope columns (an adapter layer maps
-    WS/HTTP/MQTT/Kafka payloads to them).  Exactly-once into the log comes
-    from checkpoint + idempotent file commits — replacing the reference's
-    1000-retry batch machinery (src/storage/BatchManager.ts:47).
-
-    `dedup_watermark` (e.g. "10 minutes") additionally drops re-published
-    message ids arriving within the watermark — Cassandra's primary-key
-    upsert semantics for at-least-once sources, with state bounded by the
-    watermark instead of the full log
-    (`dropDuplicatesWithinWatermark` on the message id).
+    WS/HTTP/MQTT/Kafka payloads to them).  Validation stays in the
+    streaming plan, so the future-ts guard compares against each
+    micro-batch's timestamp.  Every micro-batch is committed by
+    `storage.store_idempotent`, the log's one writer: a batch the
+    checkpoint replays after a crash, or a message id re-published later,
+    is a no-op (Cassandra's primary-key upsert, src/storage/
+    BatchManager.ts:8-10) — replacing the reference's 1000-retry batch
+    machinery (src/storage/BatchManager.ts:47).
     """
-    out = validate(source)
-    if dedup_watermark is not None:
-        from broker_spark.schema import MESSAGE_ID_COLUMNS
-
-        out = out.withWatermark("ts", dedup_watermark).dropDuplicatesWithinWatermark(
-            MESSAGE_ID_COLUMNS
-        )
-    out = prepare(out, bucket_ms)
     writer = (
-        out.writeStream.format("parquet")
-        .option("path", path)
+        validate(source)
+        .writeStream.foreachBatch(lambda batch, _: storage.store_idempotent(batch))
         .option("checkpointLocation", checkpoint)
-        .partitionBy(*PARTITION_COLUMNS)
-        .outputMode("append")
     )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)

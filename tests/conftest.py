@@ -45,8 +45,15 @@ def random_graph_with_chains(rng, n: int, n_random: int, chain_len: int) -> list
 
 
 @pytest.fixture(scope="session")
-def spark() -> SparkSession:
-    s = get_spark(app_name="broker-spark-tests", master="local[4]", shuffle_partitions=4)
+def spark(tmp_path_factory) -> SparkSession:
+    # the session's own warehouse: tables the suite saves (e.g.
+    # storage.bucketed's fixed-name bkt_* tables) never meet another
+    # process's in the checkout's shared spark-warehouse/
+    warehouse = str(tmp_path_factory.mktemp("spark-warehouse"))
+    s = get_spark(
+        app_name="broker-spark-tests", master="local[4]", shuffle_partitions=4,
+        extra_conf={"spark.sql.warehouse.dir": warehouse},
+    )
     yield s
 
 

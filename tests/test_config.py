@@ -59,6 +59,15 @@ class TestValidation:
         cfg["storageNodeRegistry"] = [{"address": "0x1", "url": "http://n1"}]
         validate_config(cfg)
 
+    def test_start_broker_rejects_non_storage_node(self):
+        cfg = base_config(
+            network={"name": "n", "isStorageNode": False},
+            storageNodeRegistry=[{"address": "0x1", "url": "http://n1"}],
+        )
+        del cfg["storage"]
+        with pytest.raises(ValueError, match="storage nodes only"):
+            start_broker(None, cfg)
+
     def test_load_config_from_file(self, tmp_path):
         p = tmp_path / "broker.json"
         p.write_text(json.dumps(base_config()))

@@ -41,13 +41,12 @@ def test_ingest_store_query_fanout(spark, tmp_path):
         make_msg("other", 1, base_ts, 0),                # different stream
     ]
     spark.createDataFrame(rows, ENVELOPE).write.mode("append").parquet(src)
+    st = Storage(spark, log, bucket_ms=10_000)
     q = ingest.start_ingest(
-        spark.readStream.schema(ENVELOPE).parquet(src), log, ckpt,
-        bucket_ms=10_000, trigger_available_now=True,
+        spark.readStream.schema(ENVELOPE).parquet(src), st, ckpt,
+        trigger_available_now=True,
     )
     q.awaitTermination(120)
-
-    st = Storage(spark, log, bucket_ms=10_000)
 
     # 2. maintenance hook sees the stored batch (summary-side count)
     foreach_batch_bucket_index(summary, bucket_ms=10_000)(st._log(), 0)

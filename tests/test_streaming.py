@@ -8,7 +8,9 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from broker_spark.operators import resend
+from broker_spark.operators import resend, retention
+from broker_spark.storage.store import Storage
+from broker_spark.storage.writer import compact_partitions
 from broker_spark.streaming import ingest
 from tests.conftest import make_msg
 
@@ -73,7 +75,8 @@ class TestStreamingWrite:
 
         source = spark.readStream.schema(ENVELOPE).parquet(src_dir)
         q = ingest.start_ingest(
-            source, out_dir, ckpt, bucket_ms=1000, trigger_available_now=True
+            source, Storage(spark, out_dir, bucket_ms=1000), ckpt,
+            trigger_available_now=True,
         )
         q.awaitTermination(120)
         stored = spark.read.parquet(out_dir)
@@ -96,9 +99,54 @@ class TestStreamingWrite:
         spark.createDataFrame(rows, ENVELOPE).write.mode("overwrite").parquet(src_dir)
         for _ in range(2):
             source = spark.readStream.schema(ENVELOPE).parquet(src_dir)
-            q = ingest.start_ingest(source, out_dir, ckpt, trigger_available_now=True)
+            q = ingest.start_ingest(
+                source, Storage(spark, out_dir), ckpt, trigger_available_now=True
+            )
             q.awaitTermination(120)
         assert spark.read.parquet(out_dir).count() == 50
+
+
+class TestIngestedLogIsAStorageLog:
+    """A log first written by `start_ingest` is an ordinary `Storage` log:
+    the gateway's writes, compaction and retention all act on it.  One
+    message per 10 s bucket: 5 ingested, then 3 committed by `store`."""
+
+    @pytest.fixture()
+    def log(self, spark, tmp_path):
+        """(storage, ts of the first message, which opens its bucket)"""
+        src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+        st = Storage(spark, str(tmp_path / "log"), bucket_ms=10_000)
+        base = (_now_ms() - 120_000) // 10_000 * 10_000
+        rows = [make_msg("s", 0, base + i * 10_000, 0) for i in range(8)]
+        spark.createDataFrame(rows[:5], ENVELOPE).write.parquet(src)
+        q = ingest.start_ingest(
+            spark.readStream.schema(ENVELOPE).parquet(src), st, ckpt,
+            trigger_available_now=True,
+        )
+        q.awaitTermination(120)
+        st.store(spark.createDataFrame(rows[5:], ENVELOPE))
+        return st, base
+
+    def test_store_rows_are_served(self, log):
+        st, _ = log
+        assert st.request_last("s", 0, 100).count() == 8
+        assert st.partition_metadata("s", 0)["totalMessages"] == 8
+
+    def test_compaction_keeps_every_row(self, spark, log):
+        st, _ = log
+        compact_partitions(spark, st.path)
+        assert st.request_last("s", 0, 100).count() == 8
+
+    def test_retention_drop_keeps_the_rest(self, spark, log):
+        st, base = log
+        first = spark.createDataFrame(
+            [("s", 0, base // 10_000)], "stream_id string, partition int, bucket long"
+        )
+        assert len(retention.drop_expired_partitions(spark, st.path, first)) == 1
+        got = st.request_last("s", 0, 100).collect()
+        assert [int(r["ts"].timestamp() * 1000) for r in got] == [
+            base + i * 10_000 for i in range(1, 8)
+        ]
 
 
 class TestWindowedRates:
@@ -224,7 +272,7 @@ def test_ingest_restart_from_checkpoint_is_exactly_once(spark, tmp_path):
     def run_once():
         q = ingest.start_ingest(
             spark.readStream.schema(ENVELOPE).parquet(src),
-            log, ckpt, bucket_ms=10_000, trigger_available_now=True,
+            Storage(spark, log, bucket_ms=10_000), ckpt, trigger_available_now=True,
         )
         q.awaitTermination(120)
 
@@ -246,3 +294,31 @@ def test_ingest_restart_from_checkpoint_is_exactly_once(spark, tmp_path):
     # no duplicate message ids anywhere in the log
     key = ["stream_id", "partition", "ts", "sequence_no", "publisher_id"]
     assert log_df.select(*key).distinct().count() == 70
+
+
+def test_replayed_batch_is_stored_once(spark, tmp_path):
+    """A batch the checkpoint replays (its commit record lost in a crash)
+    is committed again through `store_idempotent`, which stores nothing
+    twice; and the log carries no file-sink `_spark_metadata` index."""
+    import os
+    import shutil
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    st = Storage(spark, str(tmp_path / "log"), bucket_ms=10_000)
+    base = _now_ms() - 60_000
+    rows = [make_msg("rpl", 0, base + i * 1000, i) for i in range(50)]
+    spark.createDataFrame(rows, ENVELOPE).write.parquet(src)
+
+    def run():
+        q = ingest.start_ingest(
+            spark.readStream.schema(ENVELOPE).parquet(src), st, ckpt,
+            trigger_available_now=True,
+        )
+        q.awaitTermination(120)
+
+    run()
+    shutil.rmtree(os.path.join(ckpt, "commits"))  # batch 0 ran, its commit is lost
+    run()  # replays batch 0 from its logged offsets
+    got = st.request_last("rpl", 0, 100).collect()
+    assert sorted(r["sequence_no"] for r in got) == list(range(50))
+    assert not any("_spark_metadata" in dirs for _, dirs, _ in os.walk(st.path))

@@ -60,16 +60,21 @@ class WsClient:
 
 
 @pytest.fixture()
-def server(spark, tmp_path):
+def spool(spark, tmp_path):
     st = Storage(spark, str(tmp_path / "ws-log"), bucket_ms=3_600_000)
     spool = PublishSpool(st, partition_count=1, close_timeout_s=60.0)
-    srv = ws.serve_ws(st, spool=spool, ping_interval_s=3600.0)  # no auto-ping
-    yield srv
+    yield spool
     spool.close()
+
+
+@pytest.fixture()
+def server(spool):
+    srv = ws.serve_ws(spool.storage, spool=spool, ping_interval_s=3600.0)  # no auto-ping
+    yield srv
     srv.shutdown()
 
 
-def test_publish_subscribe_resend_over_ws(server):
+def test_publish_subscribe_resend_over_ws(server, spool):
     port = server.server_address[1]
     c = WsClient(port)
 
@@ -83,13 +88,16 @@ def test_publish_subscribe_resend_over_ws(server):
     resp = c.recv_json()
     assert resp["type"] == "PublishResponse"
 
+    spool.flush()
     c.send_json({"type": "ResendLastRequest", "requestId": "r2", "streamId": "ws-s",
                  "streamPartition": 0, "numberLast": 10})
-    # spool hasn't flushed -> NoResend is a valid lifecycle outcome; force it
-    msgs = [c.recv_json()]
-    while msgs[-1]["type"] not in ("ResendResponseResent", "ResendResponseNoResend"):
-        msgs.append(c.recv_json())
+    msgs = [c.recv_json() for _ in range(3)]
     c.close()
+    assert [m["type"] for m in msgs] == [
+        "ResendResponseResending", "UnicastMessage", "ResendResponseResent",
+    ]
+    assert all(m["requestId"] == "r2" for m in msgs)
+    assert msgs[1]["streamMessage"][1][2] == 1000  # the published ts
 
 
 def test_client_ping_gets_pong(server):
