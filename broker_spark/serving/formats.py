@@ -124,8 +124,8 @@ def get_format(format_id: str | None) -> Format | None:
 def frame(rows: Iterator[Any], fmt: Format, version: int | None = None) -> Iterator[str]:
     """Stream header / messages-with-delimiters / footer — the
     ResponseTransform framing (src/http/DataQueryEndpoints.ts:20-52),
-    usable over any row iterator (`Storage.stream_rows` /
-    `toLocalIterator`) without materializing the result."""
+    lazily over any row iterator (`Storage.stream_rows`), so a streamed
+    answer is framed as its rows arrive."""
     first = True
     for row in rows:
         yield fmt.header if first else fmt.delimiter

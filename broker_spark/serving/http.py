@@ -16,16 +16,19 @@ Authentication (src/http/RequestAuthenticatorMiddleware.ts) is a call-out
 to an external core API (`serving.auth.StreamFetcher`); without a fetcher
 every request is allowed.
 
-Results are streamed: the handler iterates `Storage.stream_rows`
-(`toLocalIterator`) through `formats.frame`, chunk-encoding each message
-— no `collect()`, so a 10k-message resend never materializes driver-side
-(W6; the reference's pause/resume backpressure becomes HTTP flow
-control).
+Results are chunk-encoded as they are framed: the handler iterates
+`Storage.stream_rows` through `formats.frame` and writes one chunk per
+64 KiB of framed bytes.  A small answer (every `last`, capped at 10k
+messages, and a `from`/`range` over a stream-partition that fits one
+split) is collected in one Spark job; a larger one is streamed a
+partition at a time with `toLocalIterator` (W6; the reference's
+pause/resume backpressure becomes HTTP flow control).
 """
 
 from __future__ import annotations
 
 import functools
+import itertools
 import json
 import re
 import threading
@@ -40,6 +43,10 @@ _DATA_RE = re.compile(r"^/(?:api/v1/)?streams/([^/]+)/data/partitions/([^/]+)/(l
 _META_RE = re.compile(r"^/(?:api/v1/)?streams/([^/]+)/metadata/partitions/([^/]+)$")
 _PRODUCE_RE = re.compile(r"^/(?:api/v1/)?streams/([^/]+)/data$")
 _STORAGE_RE = re.compile(r"^/(?:api/v1/)?streams/([^/]+)/storage/partitions/([^/]+)$")
+
+#: A resend body goes out in chunks of at least this many framed bytes (the
+#: last one may be shorter), not one chunk per delimiter and message.
+_CHUNK_BYTES = 64 * 1024
 
 
 def _parse_int_if_exists(qs: dict, key: str):
@@ -294,8 +301,16 @@ class DataQueryHandler(BaseHTTPRequestHandler):
         # Build the query and pull the first frame chunk BEFORE committing
         # the 200 so a storage failure still yields the reference's 500 JSON
         # ('data.on("error")' before headersSent, DataQueryEndpoints.ts:86-93).
+        delivered = {"messages": 0, "bytes": 0}
+
+        def counted(rows):
+            for row in rows:
+                delivered["messages"] += 1
+                delivered["bytes"] += len(row["content"] or "")
+                yield row
+
         try:
-            pieces = frame(self.storage.stream_rows(request()), fmt, version)
+            pieces = frame(counted(self.storage.stream_rows(request())), fmt, version)
             first = next(pieces)
         except StopIteration:
             first = None
@@ -306,25 +321,27 @@ class DataQueryHandler(BaseHTTPRequestHandler):
         self.send_header("Content-Type", fmt.content_type)
         self.send_header("Transfer-Encoding", "chunked")
         self.end_headers()
-        out_bytes = 0
         try:
-            for piece in ([first] if first is not None else []):
+            pending, size = [], 0
+            for piece in itertools.chain([first] if first is not None else [], pieces):
                 data = piece.encode()
-                if data:
-                    self.wfile.write(b"%x\r\n%s\r\n" % (len(data), data))
-                    out_bytes += len(data)
-            for piece in pieces:
-                data = piece.encode()
-                if data:
-                    self.wfile.write(b"%x\r\n%s\r\n" % (len(data), data))
-                    out_bytes += len(data)
+                pending.append(data)
+                size += len(data)
+                if size >= _CHUNK_BYTES:
+                    self._write_chunk(b"".join(pending))
+                    pending, size = [], 0
+            if size:
+                self._write_chunk(b"".join(pending))
             self.wfile.write(b"0\r\n\r\n")
         except (BrokenPipeError, ConnectionResetError):
             pass  # client abort cancels the iteration (DataQueryEndpoints.ts:96-99)
         finally:
             if self.metrics is not None:  # storageRead counters (VolumeLogger)
-                self.metrics.record("storage.readBytes", out_bytes)
-                self.metrics.record("storage.readMessages", 1)
+                self.metrics.record("storage.readMessages", delivered["messages"])
+                self.metrics.record("storage.readBytes", delivered["bytes"])
+
+    def _write_chunk(self, data: bytes) -> None:
+        self.wfile.write(b"%x\r\n%s\r\n" % (len(data), data))
 
     # -- metadata (DataMetadataEndpoints.ts) --------------------------------
     def _handle_metadata(self, stream_id: str, partition_raw: str) -> None:

@@ -9,9 +9,10 @@ and, on storage failure,
 
 The reference runs this over uWS websockets; the lifecycle itself is
 engine logic, so it is expressed as a generator over any row iterator
-(`Storage.stream_rows` — one Spark partition fetched at a time, the
-backpressure analog of the reference's pause/resume).  A websocket/TCP
-transport just forwards the yielded dicts.
+(`Storage.stream_rows` — a small answer collected in one Spark job, a
+larger one fetched a partition at a time, the backpressure analog of the
+reference's pause/resume).  A websocket/TCP transport just forwards the
+yielded dicts.
 """
 
 from __future__ import annotations

@@ -3,10 +3,11 @@ partitioned parquet log + the resend/metadata operators.
 
 Mirrors the public surface of src/storage/Storage.ts:
 requestLast / requestFrom / requestRange (101-435) — each returning a
-lazily-planned DataFrame; the serving layer decides how to consume it
-(`toLocalIterator()` for streamed delivery with backpressure, the analog of
-the reference's pause/resume row streaming at 412-435) — and the metadata
-numbers (first/last message ts, message count, total bytes, 452-576).
+lazily-planned DataFrame over only its own stream-partition's directory,
+delivered by `stream_rows` (one job for a one-partition answer, otherwise
+`toLocalIterator()`, the analog of the reference's pause/resume row
+streaming at 412-435) — and the metadata numbers (first/last message ts,
+message count, total bytes, 452-576).
 
 Stream ids are stored as directory names (`stream_id=<escaped id>`), so
 any string round-trips unchanged: `/`, `:`, `%`, `=`, spaces, quotes,
@@ -21,7 +22,7 @@ the log read as one-message summary rows.  Storage only picks the source.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,9 +107,38 @@ class Storage:
             return log
         return self.spark.createDataFrame([], STREAM_LOG_SCHEMA)
 
+    def _partition_log(self, stream_id: str, partition: int) -> DataFrame:
+        """The log opened at one stream-partition's directory, listed afresh
+        on every call so each read sees every commit made before it.  A
+        stream-partition with no directory yet falls back to the whole-log
+        open: empty on a written log, and whatever `_log` answers on an
+        unwritten or unreadable one."""
+        log = if_written(
+            lambda: read_stream_data(
+                self.spark, self.path, stream_id=stream_id, partition=partition
+            )
+        )
+        return self._log() if log is None else log
+
+    def _ordered_source(self, stream_id: str, partition: int) -> DataFrame:
+        """The source of a `from`/`range` answer.  When the stream-partition's
+        files fit one split (`spark.sql.files.maxPartitionBytes`), it is
+        read as one partition, so the answer's ordering is a sort within
+        that partition: one job, no range-partitioning sample.  Larger
+        stream-partitions keep the range-partitioned sort, which
+        `stream_rows` delivers a partition at a time."""
+        log = self._partition_log(stream_id, partition)
+        size = int(log._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        return log.coalesce(1) if size <= split else log
+
     def request_last(self, stream_id: str, partition: int, n: int) -> DataFrame:
         return resend.request_last(
-            self._log(), stream_id, partition, n, bucket_ms=self.bucket_ms
+            self._partition_log(stream_id, partition),
+            stream_id,
+            partition,
+            n,
+            bucket_ms=self.bucket_ms,
         )
 
     def request_from(
@@ -121,7 +151,7 @@ class Storage:
         msg_chain_id: str | None = None,
     ) -> DataFrame:
         return resend.request_from(
-            self._log(),
+            self._ordered_source(stream_id, partition),
             stream_id,
             partition,
             from_ms,
@@ -143,7 +173,7 @@ class Storage:
         msg_chain_id: str | None = None,
     ) -> DataFrame:
         return resend.request_range(
-            self._log(),
+            self._ordered_source(stream_id, partition),
             stream_id,
             partition,
             from_ms,
@@ -155,34 +185,43 @@ class Storage:
             bucket_ms=self.bucket_ms,
         )
 
-    # -- streamed delivery (W6 backpressure analog) -------------------------
+    # -- delivery (W6 backpressure analog) ----------------------------------
     def stream_rows(self, df: DataFrame) -> Iterator:
-        """Row-at-a-time delivery without collect(): `toLocalIterator`
-        fetches one partition at a time — the engine-side equivalent of the
-        reference's pause/resume streaming (src/storage/Storage.ts:418-429)."""
+        """The answer's rows.  A frame whose physical plan has one output
+        partition (every `last`, and `from`/`range` over a stream-partition
+        that fits one split) is collected in one job.  Any other is
+        streamed with `toLocalIterator`, one partition in driver memory at
+        a time — the engine-side equivalent of the reference's
+        pause/resume streaming (src/storage/Storage.ts:418-429)."""
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()  # its current plan, exchanges included
+        if plan.outputPartitioning().numPartitions() == 1:
+            return iter(df.collect())
         return df.toLocalIterator(prefetchPartitions=True)
 
     # -- metadata (src/http/DataMetadataEndpoints.ts:21-26) -----------------
-    def _summary_rows(self) -> DataFrame:
+    def _summary_rows(self, open_log: Callable[[], DataFrame]) -> DataFrame:
         """The rollup's source: the maintained summary when `summary_path`
-        can be read, otherwise the log's one-message summary rows (bucketed
-        by the log's own `bucket` partition column)."""
+        can be read, otherwise the one-message summary rows (bucketed by
+        the log's own `bucket` partition column) of `open_log()`."""
         if self.summary_path is not None:
             summary = if_written(lambda: self.spark.read.parquet(self.summary_path))
             if summary is not None:
                 return summary
-        return metadata.message_rows(self._log())
+        return metadata.message_rows(open_log())
 
     def bucket_index(self) -> DataFrame:
         """One summary row per (stream, partition, bucket)."""
-        return metadata.summarize(self._summary_rows(), *metadata.BUCKET_KEYS)
+        return metadata.summarize(self._summary_rows(self._log), *metadata.BUCKET_KEYS)
 
     def partition_summary(self, stream_id: str, partition: int) -> DataFrame:
         """One row: the summary of one stream-partition — the frame behind
-        `partition_metadata`."""
-        rows = self._summary_rows().filter(
-            (F.col("stream_id") == stream_id) & (F.col("partition") == partition)
-        )
+        `partition_metadata`.  Without a summary it reads only that
+        stream-partition's directory."""
+        rows = self._summary_rows(
+            lambda: self._partition_log(stream_id, partition)
+        ).filter((F.col("stream_id") == stream_id) & (F.col("partition") == partition))
         return metadata.summarize(rows)
 
     def partition_metadata(self, stream_id: str, partition: int) -> dict:

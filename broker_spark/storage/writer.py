@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from broker_spark.operators.retention import escape_path_name
 from broker_spark.schema import (
     DEFAULT_BUCKET_MS,
     ORDERING_COLUMNS,
@@ -145,12 +146,23 @@ def plan_compaction_groups(
 
 
 def read_stream_data(
-    spark: SparkSession, path: str, merge_schema: bool = False
+    spark: SparkSession,
+    path: str,
+    merge_schema: bool = False,
+    stream_id: str | None = None,
+    partition: int | None = None,
 ) -> DataFrame:
     """Open the message log; partition columns come back from directory
     names, so filters on (stream_id, partition, bucket) prune directories
     before any file is opened — the two-level bucket-index lookup
     (src/storage/BucketManager.ts:228-264) for free.
+
+    Given `stream_id` and `partition`, only that stream-partition's
+    directory is listed (`basePath` stays the log root, so the frame keeps
+    every partition column): the reference's one-partition-key read
+    (src/storage/Storage.ts:109-112), whose cost does not grow with the
+    rest of the log.  A stream-partition with no directory raises
+    `PATH_NOT_FOUND`, like a missing log.
 
     The log is read with its fixed schema (`STREAM_LOG_SCHEMA`), never
     an inferred one: opening lists files but reads no footer and runs no
@@ -173,7 +185,12 @@ def read_stream_data(
         if merged is not None:
             extra = [f for f in merged.schema.fields if f.name not in schema.fieldNames()]
             schema = StructType(schema.fields + extra)
-    df = spark.read.schema(schema).parquet(path)
+    reader = spark.read.schema(schema)
+    if stream_id is None:
+        df = reader.parquet(path)
+    else:
+        where = f"{path}/stream_id={escape_path_name(stream_id)}/partition={partition}"
+        df = reader.option("basePath", path).parquet(where)
     relation = df._jdf.queryExecution().analyzed().relation()
     if (
         relation.partitionSchema().simpleString() != _LOG_PARTITIONS

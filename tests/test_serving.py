@@ -239,6 +239,174 @@ def test_special_stream_ids_round_trip_over_http(spark, tmp_path):
         server.shutdown()
 
 
+def test_glob_metacharacter_stream_ids_round_trip_over_http(spark, tmp_path):
+    """A resend opens its own stream-partition's directory by path, so a
+    stream id holding Hadoop glob metacharacters must still name exactly
+    that directory: publish -> flush -> resend last/from/range ->
+    metadata answer that stream's messages, with the id unchanged."""
+    from broker_spark.serving.publish import PublishSpool
+
+    sids = ["a}b", "c{d}", "e*f", "g[h]", "n?m", "x,y", "t\\u"]
+    st = Storage(spark, str(tmp_path / "glob-log"), bucket_ms=3_600_000)
+    spool = PublishSpool(st, partition_count=1, close_timeout_s=30.0)
+    server = serving_http.serve(st, spool=spool)
+    host, port = server.server_address
+    base = f"http://{host}:{port}/streams"
+    try:
+        for k, sid in enumerate(sids):
+            enc = urllib.parse.quote(sid, safe="")
+            for i in range(k % 3 + 1):
+                req = urllib.request.Request(
+                    f"{base}/{enc}/data?ts={1000 + i * 1000}&seq={k}",
+                    data=json.dumps({"sid": sid, "i": i}).encode(),
+                    method="POST",
+                )
+                with urllib.request.urlopen(req, timeout=60) as r:
+                    assert r.status == 200
+        spool.flush()
+        for k, sid in enumerate(sids):
+            enc = urllib.parse.quote(sid, safe="")
+            want_ts = [1000 + i * 1000 for i in range(k % 3 + 1)]
+            for suffix in (
+                "last?count=10",
+                "from?fromTimestamp=0",
+                "range?fromTimestamp=0&toTimestamp=10000",
+            ):
+                status, _, body = _get(f"{base}/{enc}/data/partitions/0/{suffix}")
+                assert status == 200, (sid, suffix)
+                msgs = json.loads(body)
+                assert [m[1][0] for m in msgs] == [sid] * len(want_ts), (sid, suffix)
+                assert [m[1][2] for m in msgs] == want_ts, (sid, suffix)
+                assert {json.loads(m[6])["sid"] for m in msgs} == {sid}
+            status, _, body = _get(f"{base}/{enc}/metadata/partitions/0")
+            assert status == 200
+            meta = json.loads(body)
+            assert (meta["totalMessages"], meta["firstMessage"], meta["lastMessage"]) == (
+                len(want_ts), want_ts[0], want_ts[-1]
+            ), sid
+    finally:
+        server.shutdown()
+
+
+def test_partition_without_directory_answers_empty(storage, base_url):
+    """A stream-partition never written to, on a written log, has no
+    directory: its resends answer `[]` (NoResend over the control
+    lifecycle) and its metadata zero — not PATH_NOT_FOUND or a 500."""
+    for suffix in (
+        "data/partitions/7/last?count=5",
+        "data/partitions/7/from?fromTimestamp=0",
+        "data/partitions/7/range?fromTimestamp=0&toTimestamp=5000",
+    ):
+        status, _, body = _get(f"{base_url}/streams/s1/{suffix}")
+        assert (status, json.loads(body)) == (200, []), suffix
+    status, _, body = _get(f"{base_url}/streams/s1/metadata/partitions/7")
+    assert (status, json.loads(body)) == (200, {
+        "totalBytes": 0, "totalMessages": 0, "firstMessage": None, "lastMessage": None,
+    })
+    for df in (
+        storage.request_last("s1", 7, 5),
+        storage.request_from("s1", 7, 0),
+        storage.request_range("s1", 7, 0, 0, 5000, 0),
+    ):
+        out = list(resend_response("req-7", "s1", 7, storage.stream_rows(df)))
+        assert [m["type"] for m in out] == ["ResendResponseNoResend"]
+
+
+def test_read_counters_count_delivered_messages(storage):
+    """`storage.readMessages` counts the messages a resend delivers and
+    `storage.readBytes` their content length — what the spool records
+    for a commit on the write side."""
+    from broker_spark.jobs.stream_metrics import MetricsContext
+
+    ctx = MetricsContext()
+    server = serving_http.serve(storage, metrics=ctx)
+    host, port = server.server_address
+    try:
+        status, _, body = _get(
+            f"http://{host}:{port}/streams/s1/data/partitions/0/last?count=3"
+        )
+    finally:
+        server.shutdown()
+    assert status == 200 and len(json.loads(body)) == 3
+    totals = {k: v["total"] for k, v in ctx.report()["metrics"].items()}
+    assert totals["storage.readMessages"] == 3
+    assert totals["storage.readBytes"] == sum(len('{"v": %d}' % i) for i in (1, 2, 3))
+
+
+BIG_MESSAGES = 10_500
+
+
+@pytest.fixture(scope="module")
+def big_storage(spark, tmp_path_factory):
+    """One stream-partition past the resend-last clamp, over 18 buckets."""
+    path = str(tmp_path_factory.mktemp("serving-big") / "log")
+    st = Storage(spark, path, bucket_ms=60_000)
+    rows = [
+        ("big", 0, _dt(i * 100), i % 7, "pub", "c", json.dumps({"i": i, "pad": "x" * 40}))
+        for i in range(BIG_MESSAGES)
+    ]
+    st.store(spark.createDataFrame(rows, ENVELOPE))
+    return st
+
+
+def _get_chunks(host: str, port: int, path: str) -> list[bytes]:
+    """The chunks of a chunked 200 response, as sent, terminator included."""
+    import socket
+
+    with socket.create_connection((host, port), timeout=120) as s:
+        s.sendall(f"GET {path} HTTP/1.1\r\nHost: x\r\nConnection: close\r\n\r\n".encode())
+        raw = b""
+        while data := s.recv(1 << 16):
+            raw += data
+    head, _, rest = raw.partition(b"\r\n\r\n")
+    assert head.startswith(b"HTTP/1.1 200") and b"Transfer-Encoding: chunked" in head
+    chunks = []
+    while True:
+        size, _, rest = rest.partition(b"\r\n")
+        n = int(size, 16)
+        chunks.append(rest[:n])
+        assert rest[n:n + 2] == b"\r\n"
+        rest = rest[n + 2:]
+        if n == 0:
+            return chunks
+
+
+def test_resend_body_goes_out_in_64k_chunks(big_storage):
+    """A 3,000-message resend is written in chunks of at least 64 KiB (the
+    last may be shorter), not two chunks per message, and its decoded
+    body is exactly `frame`'s output."""
+    server = serving_http.serve(big_storage)
+    host, port = server.server_address
+    try:
+        chunks = _get_chunks(host, port, "/streams/big/data/partitions/0/last?count=3000")
+    finally:
+        server.shutdown()
+    want = "".join(
+        frame(big_storage.stream_rows(big_storage.request_last("big", 0, 3000)),
+              get_format(None))
+    ).encode()
+    body = b"".join(chunks)
+    assert body == want
+    assert len(json.loads(body)) == 3000
+    assert len(chunks) <= -(-len(body) // (64 * 1024)) + 1
+
+
+def test_last_past_the_clamp_returns_newest_10000(big_storage):
+    """`last?count=20000` answers exactly the newest 10,000 messages, in
+    order (the reference's clamp, Storage.ts:18,102-105)."""
+    server = serving_http.serve(big_storage)
+    host, port = server.server_address
+    try:
+        status, _, body = _get(
+            f"http://{host}:{port}/streams/big/data/partitions/0/last?count=20000"
+        )
+    finally:
+        server.shutdown()
+    assert status == 200
+    got = [json.loads(m[6])["i"] for m in json.loads(body)]
+    assert got == list(range(BIG_MESSAGES - 10_000, BIG_MESSAGES))
+
+
 def test_serving_ms_is_tz_independent(base_url):
     """Formatted epoch-ms must not shift on a non-UTC host: PySpark
     materializes naive *local-time* datetimes, and the formatter must

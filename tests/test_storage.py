@@ -51,6 +51,65 @@ def test_partition_pruning_in_plan(store):
     assert "bucket" in plan
 
 
+def _jobs_run(spark, read) -> tuple[list, int]:
+    """`read()`'s result and the number of Spark jobs it ran, counted under
+    a job group read back through `statusTracker()`."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_small_resends_run_one_job(store, spark):
+    """On a stream-partition that fits one split, every resend is opened,
+    planned and delivered through `stream_rows` in exactly one Spark job."""
+    for name, request, n in (
+        ("last", lambda: store.request_last("s1", 0, 4), 4),
+        ("from", lambda: store.request_from("s1", 0, 6000, 1), 15),
+        ("range", lambda: store.request_range("s1", 0, 1000, 0, 3000, 1), 10),
+    ):
+        out, jobs = _jobs_run(spark, lambda: list(store.stream_rows(request())))
+        assert (len(out), jobs) == (n, 1), name
+        assert ids(out) == sorted(ids(out)), name
+
+
+def test_from_past_one_split_streams_in_order(store, spark):
+    """A stream-partition larger than one split keeps the range-partitioned
+    sort: the answer streams through more than one partition, still in
+    exact (ts, sequence_no, publisher_id, msg_chain_id) order."""
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        df = store.request_from("s1", 0, 1000)
+        plan = df._jdf.queryExecution().executedPlan().executedPlan()
+        assert plan.outputPartitioning().numPartitions() > 1
+        out = list(store.stream_rows(df))
+    finally:
+        spark.conf.set(key, prev)
+    got = ids(out)
+    assert len(got) == 36 and got == sorted(got)
+
+
+def test_write_by_another_storage_is_read_next(store, spark, tmp_path):
+    """Each resend lists its stream-partition afresh: a bucket another
+    `Storage` writes to the same log is in the first one's next answer."""
+    first = Storage(spark, str(tmp_path / "shared"), bucket_ms=1000)
+    first.store(spark.createDataFrame([make_msg("s", 0, 1000, 0)], STREAM_MESSAGE_SCHEMA))
+    assert [r["sequence_no"] for r in first.request_from("s", 0, 0).collect()] == [0]
+    other = Storage(spark, first.path, bucket_ms=1000)
+    other.store(spark.createDataFrame([make_msg("s", 0, 5000, 1)], STREAM_MESSAGE_SCHEMA))
+    assert [r["sequence_no"] for r in first.request_last("s", 0, 10).collect()] == [0, 1]
+    assert [r["sequence_no"] for r in first.request_from("s", 0, 0).collect()] == [0, 1]
+    assert first.partition_metadata("s", 0)["totalMessages"] == 2
+
+
 def test_metadata_aggregates(store):
     assert store.partition_metadata("s1", 0) == {
         "totalBytes": 40 * len('{"hello":"world"}'),
